@@ -18,8 +18,11 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * `_SUCCESS`-marker directory dance) per write — measured at roughly half
   * the layered commit's wall-clock constant on the bench's lakehouse
   * fixtures. `ParquetWriter` over the same Hadoop `FileSystem` produces an
-  * equivalent single parquet FILE in one round of driver I/O; every reader
-  * already goes through `spark.read.parquet(path)`, which accepts a bare
+  * equivalent single parquet FILE in one round of driver I/O. The commit
+  * paths read these artifacts back driver-side too (descriptors, COW and
+  * MOR segment rows — [[readDescriptorRows]], [[readCowSegmentRows]],
+  * [[readMorSegmentRows]]); the full-version read and vacuum still scan
+  * segments with `spark.read.parquet(path)`. Every reader accepts a bare
   * file as readily as a Spark-written directory, so old (directory-form)
   * and new (file-form) manifests coexist in one table's history.
   *
@@ -33,11 +36,11 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 private[ops] object ManifestIo {
 
   /** Bounded driver cache for IMMUTABLE parquet metadata — segment rows
-    * and data-file footer facts, keyed by qualified path. Sound because
+    * and data-file footer schemas, keyed by qualified path. Sound because
     * every cached artifact is write-once under a uuid-unique name (a
     * vacuumed path is never asked about again; a reused name cannot
-    * exist). Populated for free at write time by the commit paths, so a
-    * steady-state auto-fold re-reads almost nothing: the footer opens
+    * exist). Segment rows are cached for free at write time by the commit
+    * paths, so a steady-state auto-fold re-reads almost nothing: the footer opens
     * (~10 ms each on a local store, a full round-trip on an object
     * store) were most of the scoped fold's residual latency. Eviction is
     * LRU (access-ordered), one entry per over-cap insert — NOT a
@@ -157,18 +160,10 @@ private[ops] object ManifestIo {
     * any row group lacks valid stats or the column is missing — callers
     * fall back to the scan. */
   def footerKeyBounds(conf: Configuration, file: Path,
-      colName: String): Option[(Long, Long)] =
-    footerFacts(conf, file, colName).map(_._1)
-
-  /** [[footerKeyBounds]] plus the file's parquet schema from the SAME
-    * footer round-trip — the write paths cache both facts at move time
-    * (see [[MetaCache]]), so later folds touch no footer at all. */
-  def footerFacts(conf: Configuration, file: Path,
-      colName: String): Option[((Long, Long), MessageType)] = try {
+      colName: String): Option[(Long, Long)] = try {
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
     try {
-      val schema = rd.getFooter.getFileMetaData.getSchema
       val blocks = rd.getFooter.getBlocks
       if (blocks.isEmpty) return None
       var mn = Long.MaxValue
@@ -193,7 +188,7 @@ private[ops] object ManifestIo {
         }
         if (!found) return None
       }
-      Some(((mn, mx), schema))
+      Some((mn, mx))
     } finally rd.close()
   } catch { case _: Exception => None }
 
@@ -278,6 +273,36 @@ private[ops] object ManifestIo {
       Some((out.result(), nb))
     } catch { case _: Exception => None }
 
+  /** Driver-side read of COW segment rows `(bucket, file, bytes)` — a
+    * [[writeCowSegment]] file or a Spark-written directory segment (the
+    * legacy consolidation form, whose `bucket` may be int32 and whose
+    * `bytes` may be absent: read as 0, what the distributed resolution
+    * backfills). Unlike the descriptor read this never degrades to a
+    * distributed read: a segment that cannot be read is an I/O error of
+    * the commit path and propagates as one. */
+  def readCowSegmentRows(conf: Configuration,
+      fs: org.apache.hadoop.fs.FileSystem, path: Path): Vector[(Long, String, Long)] = {
+    val out = Vector.newBuilder[(Long, String, Long)]
+    partsOf(fs, path).foreach { p =>
+      readGroups(conf, p) { g =>
+        val by =
+          if (g.getType.containsField("bytes") &&
+              g.getFieldRepetitionCount("bytes") > 0) integral(g, "bytes")
+          else 0L
+        out += ((integral(g, "bucket"), g.getString("file", 0), by))
+      }
+    }
+    out.result()
+  }
+
+  private def integral(g: org.apache.parquet.example.data.Group,
+      field: String): Long =
+    g.getType.getType(field).asPrimitiveType.getPrimitiveTypeName match {
+      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
+        g.getInteger(field, 0).toLong
+      case _ => g.getLong(field, 0)
+    }
+
   /** Driver-side read-back of MOR segment rows — None past `maxRows`
     * (the scale guard: a legacy million-file segment stays a distributed
     * read) or on any missing/null field. */
@@ -297,14 +322,6 @@ private[ops] object ManifestIo {
         }
       }
       Some(out.result())
-    } catch { case _: Exception => None }
-
-  /** The parquet schema of `file`'s footer — None on any read hiccup. */
-  def footerSchema(conf: Configuration, file: Path): Option[MessageType] =
-    try {
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      try Some(rd.getFooter.getFileMetaData.getSchema) finally rd.close()
     } catch { case _: Exception => None }
 
   private def partsOf(fs: org.apache.hadoop.fs.FileSystem,

@@ -149,16 +149,9 @@ object MorTableImpl {
       val zones: Map[String, (Long, Long)] =
         if (moves.size > Moves.DistributeOver) zoneMaps(s, staging)
         else {
-          val byFooter = moves.map { case (f, b, to) =>
-            ManifestIo.footerFacts(conf, f.getPath, "user_id").map {
-              case (z, schema) =>
-                // same footer round-trip also yields the schema: cached
-                // under the FINAL name so a later fold's uniform-schema
-                // check touches no footer for files this process moved
-                ManifestIo.MetaCache.put(
-                  s"schema|${fs.makeQualified(to)}", schema)
-                s"bucket=$b/${f.getPath.getName}" -> z
-            }
+          val byFooter = moves.map { case (f, b, _) =>
+            ManifestIo.footerKeyBounds(conf, f.getPath, "user_id")
+              .map(z => s"bucket=$b/${f.getPath.getName}" -> z)
           }
           if (byFooter.forall(_.isDefined)) byFooter.flatten.toMap
           else zoneMaps(s, staging)
@@ -569,28 +562,11 @@ object MorTableImpl {
       // bucket-scoped explicit file list (O(folded buckets' files) driver
       // metadata — the same posture as every bucket-scoped read)
       val files = filesOf(over)
-      // mergeSchema exists for ERA tolerance (files written before a
-      // payload column existed), but it costs a distributed footer job.
-      // Within one MOR table the folded files' schemas are almost always
-      // byte-equal — provable from the footers driver-side for a
-      // trickle-sized fold, in which case plain single-footer inference
-      // (driver, no job) is exactly as correct.
-      val conf = s.sparkContext.hadoopConfiguration
-      val uniformSchema = files.size <= Moves.DistributeOver && {
-        val schemas = files.map { f =>
-          ManifestIo.MetaCache
-            .get[org.apache.parquet.schema.MessageType](s"schema|$f")
-            .orElse {
-              val sc = ManifestIo.footerSchema(conf, new Path(f))
-              sc.foreach(v => ManifestIo.MetaCache.put(s"schema|$f", v))
-              sc
-            }
-        }
-        schemas.head.isDefined && schemas.forall(_ == schemas.head)
-      }
-      val raw =
-        if (uniformSchema) s.read.parquet(files: _*)
-        else s.read.option("mergeSchema", "true").parquet(files: _*)
+      // ERA tolerance (files written before a payload column existed)
+      // without schema inference, which is a Spark job even for one file:
+      // the union of the files' footer schemas, read driver-side
+      val raw = s.read.schema(VersionedTableImpl.readSchemaOf(s, files))
+        .parquet(files: _*)
       val staged = foldLatest(raw) // tombstones carried
         .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
         .repartition(over.size, col("bucket"))

@@ -91,9 +91,10 @@ import graft.cdc.CdcSynth
   * NEW column and hash-matches the mixed-era state against the oracle.
   *
   * Scale shape: a commit costs O(touched buckets) like [[LakehouseOpsImpl
-  * .cowMerge]] plus one metadata-sized manifest write (the carried file
-  * rows are copied manifest→manifest as a DataFrame, never through the
-  * driver); time-travel reads prune rows by manifest semi-join; the
+  * .cowMerge]] plus one metadata-sized manifest write (the descriptor
+  * carries untouched buckets' segments by reference, and the touched
+  * buckets' file list is resolved driver-side — no metadata-only Spark
+  * job); time-travel reads prune rows by manifest semi-join; the
   * change feed joins two bucket-aligned states (hash-partitioned on the
   * key); vacuum is a driver-side metadata diff over manifests plus unlink
   * calls.
@@ -564,13 +565,55 @@ object VersionedTableImpl {
     * path has in hand after [[moveStagedRewrite]]: one [[ManifestIo]]
     * ParquetWriter pass, NO Spark job, a single-FILE segment. The job
     * launch + committer round-trip of a one-task write was about half the
-    * trickle commit's wall-clock constant (round-12 minor #4). */
+    * trickle commit's wall-clock constant (round-12 minor #4). The rows
+    * are cached under the segment's immutable path, so the next commit's
+    * driver-side resolution ([[segmentRows]]) reads nothing back. */
   private[ops] def writeSegmentRows(s: SparkSession, root: String,
       rows: Seq[(Long, String, Long)]): String = {
     val name = s"seg-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet"
-    ManifestIo.writeCowSegment(s.sparkContext.hadoopConfiguration,
-      new Path(segmentsDir(root), name), rows)
+    val path = new Path(segmentsDir(root), name)
+    ManifestIo.writeCowSegment(s.sparkContext.hadoopConfiguration, path, rows)
+    ManifestIo.MetaCache.put(segmentKey(s, path), rows.toVector)
     name
+  }
+
+  private def segmentKey(s: SparkSession, path: Path): String =
+    s"cowseg|${path.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(path)}"
+
+  /** COW segment `name`'s (bucket, file, bytes) rows, driver-side: the
+    * write-time cache entry, else one [[ManifestIo.readCowSegmentRows]]
+    * (cached in turn — segments are write-once under uuid names). Every
+    * COW segment is born from driver-resident rows (a commit's own moved
+    * files, or a legacy consolidation of a manifest that was itself
+    * driver-collected), so it is driver-sized by construction. */
+  private[ops] def segmentRows(s: SparkSession, root: String,
+      name: String): Vector[(Long, String, Long)] = {
+    val path = new Path(segmentsDir(root), name)
+    val key = segmentKey(s, path)
+    ManifestIo.MetaCache.get[Vector[(Long, String, Long)]](key).getOrElse {
+      val rows = ManifestIo.readCowSegmentRows(
+        s.sparkContext.hadoopConfiguration, fsOf(s, root), path)
+      ManifestIo.MetaCache.put(key, rows)
+      rows
+    }
+  }
+
+  /** The live (bucket, file, bytes) rows descriptor `pairs` resolve to,
+    * driver-side — the same rows as [[resolveFromPairs]]' masked join
+    * (one row per segment row whose bucket the pair's mask admits; a null
+    * mask admits all), limited to `buckets` when given. Segments whose
+    * mask admits none of the wanted buckets are never opened. */
+  private[ops] def liveRows(s: SparkSession, root: String,
+      pairs: Seq[(String, Option[Seq[Long]])],
+      buckets: Option[Seq[Long]]): Seq[(Long, String, Long)] = {
+    val want = buckets.map(_.toSet)
+    pairs.flatMap { case (seg, mask) =>
+      val admit = mask.map(_.toSet)
+      def wanted(b: Long) = admit.forall(_(b)) && want.forall(_(b))
+      val opens = admit.fold(want.forall(_.nonEmpty))(_.exists(wanted))
+      if (!opens) Nil
+      else segmentRows(s, root, seg).filter { case (b, _, _) => wanted(b) }
+    }
   }
 
   /** Serialize descriptor rows to `path` driver-side (no Spark job) —
@@ -615,10 +658,12 @@ object VersionedTableImpl {
     * manifest) falls back to the distributed read below. */
   private[ops] def descriptorPairs(s: SparkSession, root: String, v: Int,
       lin: Lineage = Main): Either[DataFrame, Seq[(String, Option[Seq[Long]])]] = {
-    manifestDataPath(fsOf(s, root), lin.visible(root, v)).foreach { p =>
-      ManifestIo.readDescriptorRows(
-          s.sparkContext.hadoopConfiguration, fsOf(s, root), p)
-        .foreach { case (rows, _) => return Right(rows) }
+    manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
+      case None => return Right(Nil) // no manifest: the empty table
+      case Some(p) =>
+        ManifestIo.readDescriptorRows(
+            s.sparkContext.hadoopConfiguration, fsOf(s, root), p)
+          .foreach { case (rows, _) => return Right(rows) }
     }
     val df = descriptorDf(s, root, v, lin)
     if (df.columns.contains("file")) Left(df)
@@ -627,11 +672,10 @@ object VersionedTableImpl {
   }
 
   /** Resolve a descriptor frame to flat per-file manifest rows
-    * (bucket, file, bytes[, kind, zone maps][, nbuckets]). The segment
-    * list is O(segments) driver metadata; the row masking — which buckets
-    * of each segment are still current — stays a broadcast join in the
-    * plan, so the FILE rows never pass through the driver. `buckets`
-    * prunes both the segment list (via the descriptor's arrays) and the
+    * (bucket, file, bytes[, kind, zone maps][, nbuckets]) as a DataFrame —
+    * the distributed form, for the legacy (flat or undecodable) manifests
+    * the driver-side descriptor read rejects and for the WAP audit's
+    * pending manifest. `buckets` prunes both the segment list and the
     * rows. Legacy file-rows manifests pass through (bytes backfilled 0). */
   private[ops] def resolveDescriptor(s: SparkSession, root: String,
       desc: DataFrame, buckets: Option[Seq[Long]] = None): DataFrame = {
@@ -658,10 +702,15 @@ object VersionedTableImpl {
     resolveFromPairs(s, root, pairs0, nb, buckets)
   }
 
-  /** The shared back half of descriptor resolution: prune segments, read
-    * them, mask to the descriptor's current buckets. `pairs0`/`nb` arrive
-    * either from the driver-side descriptor read (fast path) or from the
-    * distributed collect above (fallback). */
+  /** Descriptor pairs → flat file rows as a DATAFRAME: prune segments,
+    * scan them, mask to the descriptor's current buckets with a broadcast
+    * join. This is the FULL-VERSION read path ([[manifest]] feeding
+    * [[readManifest]]'s semi-join, the maintenance aggregates), where the
+    * file rows stay in the plan and never pass through the driver.
+    * Bucket-scoped commit paths resolve the same rows driver-side instead
+    * ([[liveRows]] via [[filesOf]]) and run no job. `pairs0`/`nb` arrive
+    * from the driver-side descriptor read or from the distributed collect
+    * above (legacy fallback). */
   private[ops] def resolveFromPairs(s: SparkSession, root: String,
       pairs0: Seq[(String, Option[Seq[Long]])], nb: Option[Long],
       buckets: Option[Seq[Long]]): DataFrame = {
@@ -697,7 +746,7 @@ object VersionedTableImpl {
     * resolved view every reader consumes; see the layering note above. */
   private[graft] def manifest(s: SparkSession, root: String, v: Int,
       lin: Lineage = Main): DataFrame =
-    resolveDescriptorAt(s, root, v, None, lin)
+    resolveDescriptorAt(s, root, v, lin)
 
   /** Copy version v's DESCRIPTOR to `tmp`, metadata→metadata — the
     * restore/branch-fork/promote write. Driver-side read+write when the
@@ -727,15 +776,14 @@ object VersionedTableImpl {
     * [[descriptorPairs]]), falling back to the distributed path on any
     * hiccup, legacy manifests included. */
   private def resolveDescriptorAt(s: SparkSession, root: String, v: Int,
-      buckets: Option[Seq[Long]], lin: Lineage = Main): DataFrame =
+      lin: Lineage = Main): DataFrame =
     manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
-      case None => resolveFromPairs(s, root, Seq.empty, None, buckets)
+      case None => resolveFromPairs(s, root, Seq.empty, None, None)
       case Some(p) =>
         ManifestIo.readDescriptorRows(
             s.sparkContext.hadoopConfiguration, fsOf(s, root), p) match {
-          case Some((rows, nb)) => resolveFromPairs(s, root, rows, nb, buckets)
-          case None =>
-            resolveDescriptor(s, root, descriptorDf(s, root, v, lin), buckets)
+          case Some((rows, nb)) => resolveFromPairs(s, root, rows, nb, None)
+          case None => resolveDescriptor(s, root, descriptorDf(s, root, v, lin))
         }
     }
 
@@ -770,13 +818,20 @@ object VersionedTableImpl {
         }
     }
 
-  /** Bucket-pruned explicit file list — ONLY for bucket-scoped reads
-    * (O(touched buckets) paths) and the driver-side vacuum diff. Full
-    * version reads go through [[readManifest]] instead. */
-  private def filesOf(s: SparkSession, root: String, v: Int,
+  /** Bucket-pruned explicit file list for bucket-scoped reads
+    * (O(touched buckets) paths), resolved on the DRIVER from the two
+    * sources already there: the descriptor rows and the COW segment rows
+    * ([[liveRows]] — write-time cached, else one driver read each). No
+    * Spark job. A legacy flat manifest (the descriptor read rejects it)
+    * keeps the distributed resolution. Full version reads go through
+    * [[readManifest]] instead. */
+  private[ops] def filesOf(s: SparkSession, root: String, v: Int,
       buckets: Option[Seq[Long]], lin: Lineage = Main): Seq[String] =
-    resolveDescriptorAt(s, root, v, buckets, lin)
-      .select(col("file")).collect().map(_.getString(0)).toSeq // metadata
+    descriptorPairs(s, root, v, lin) match {
+      case Right(pairs) => liveRows(s, root, pairs, buckets).map(_._2)
+      case Left(legacy) => resolveDescriptor(s, root, legacy, buckets)
+        .select(col("file")).collect().map(_.getString(0)).toSeq
+    }
 
   /** Stage→data move shared by every COW write path ([[commitLoop]],
     * [[compactVersion]], [[rebucket]]): list the staged `bucket=` dirs,
@@ -918,13 +973,36 @@ object VersionedTableImpl {
     else readManifest(s, root, manifest(s, root, v),
       LakehouseOpsImpl.tableSchema)
 
+  /** The raw rows of `buckets` at version v, planned with NO Spark job:
+    * the file list comes from [[filesOf]] and the read schema from
+    * [[readSchemaOf]], so neither a manifest scan nor `mergeSchema`
+    * inference (a distributed footer job) runs per commit. */
   private[ops] def readBuckets(s: SparkSession, root: String, v: Int,
       buckets: Seq[Long], emptySchema: StructType,
       lin: Lineage = Main): DataFrame = {
     val files = filesOf(s, root, v, Some(buckets), lin)
     if (files.isEmpty)
       s.createDataFrame(s.sparkContext.emptyRDD[Row], emptySchema)
-    else s.read.option("mergeSchema", "true").parquet(files: _*)
+    else s.read.schema(readSchemaOf(s, files)).parquet(files: _*)
+  }
+
+  /** The schema `mergeSchema` inference would give `files`, driver-side:
+    * each file's footer schema, left-folded in file order with
+    * `StructType.merge` (its union across payload eras: a column one era
+    * lacks reads null). Per-file schemas are cached under the file's
+    * immutable path; a file that cannot be read fails the read, as the
+    * inference job would. */
+  private[ops] def readSchemaOf(s: SparkSession, files: Seq[String]): StructType = {
+    import org.apache.spark.sql.graftshim.Bridge
+    def key(f: String) = s"sparkschema|$f"
+    val cached = files.distinct
+      .map(f => f -> ManifestIo.MetaCache.get[StructType](key(f))).toMap
+    val missing = cached.collect { case (f, None) => f }.toSeq
+    val read = missing.zip(Bridge.parquetFooterSchemas(
+      s, s.sparkContext.hadoopConfiguration, missing.map(new Path(_)))).toMap
+    read.foreach { case (f, sc) => ManifestIo.MetaCache.put(key(f), sc) }
+    files.map(f => cached(f).getOrElse(read(f)))
+      .reduceLeft(Bridge.mergeSchemas(s, _, _))
   }
 
   /** Empty base state matching the incoming batch's image payload —
@@ -1164,11 +1242,22 @@ object VersionedTableImpl {
       nBuckets: Int, maxAttempts: Int = 5,
       staleClaimMs: Long = 60000L, pendingStage: Boolean = false): Int =
     commitMergeTo(s, root, env, nBuckets, maxAttempts, staleClaimMs,
-      pendingStage, Main)
+      pendingStage, Main)._1
+
+  /** [[commitMerge]] that also returns the WINNING attempt's touched
+    * buckets, numbered under the bucket count that attempt committed with
+    * (empty when nothing was committed) — what the streaming sink's
+    * [[emitFeed]] must diff. Recomputing them after the commit would
+    * evaluate the batch a second time, and with a bucket count read
+    * before the commit a racing [[rebucket]] could have changed. */
+  private[graft] def commitMergeTouched(s: SparkSession, root: String,
+      env: DataFrame, nBuckets: Int): (Int, Seq[Long]) =
+    commitMergeTo(s, root, env, nBuckets, maxAttempts = 5,
+      staleClaimMs = 60000L, pendingStage = false, Main)
 
   private[ops] def commitMergeTo(s: SparkSession, root: String, env: DataFrame,
       nBuckets: Int, maxAttempts: Int, staleClaimMs: Long,
-      pendingStage: Boolean, lin: Lineage): Int = {
+      pendingStage: Boolean, lin: Lineage): (Int, Seq[Long]) = {
     // bucket count is a TABLE property ([[tableBuckets]]): the stored
     // value wins over the caller's parameter, so a [[rebucket]] is
     // transparent to every existing writer (a stale parameter would
@@ -1212,12 +1301,16 @@ object VersionedTableImpl {
     * the attempt makes a successful publish of v+1 PROOF the bucketing
     * written was v's: a rebucket publishing between our read and our
     * claim leaves its claim file on v+1, so our claim loses and the
-    * retry re-resolves. */
+    * retry re-resolves.
+    *
+    * Returns the committed version with the winning attempt's touched
+    * buckets — or (current version, empty) when the batch touches
+    * nothing. */
   private def commitLoop(s: SparkSession, root: String, nBucketsOrElse: Int,
       touchedOf: Int => Seq[Long], emptySchema: StructType, maxAttempts: Int,
       staleClaimMs: Long, pendingStage: Boolean, what: String,
       lin: Lineage = Main)
-      (merge: DataFrame => DataFrame): Int = {
+      (merge: DataFrame => DataFrame): (Int, Seq[Long]) = {
     val fs = fsOf(s, root)
     var attempt = 0
     while (true) {
@@ -1225,7 +1318,7 @@ object VersionedTableImpl {
       val v = currentVersionOf(s, root, lin)
       val nBuckets = bucketsAt(s, root, v, nBucketsOrElse, lin)
       val touched = touchedOf(nBuckets)
-      if (touched.isEmpty) return v
+      if (touched.isEmpty) return (v, Nil)
       val newV = v + 1
       val base = readBuckets(s, root, v, touched, emptySchema, lin)
       val merged = merge(base)
@@ -1298,7 +1391,7 @@ object VersionedTableImpl {
               releaseClaim(s, root, newV, cid, staleClaimMs, lin)
               throw e
           }
-        if (won) return newV
+        if (won) return (newV, touched)
       }
       // lost the race: staged descriptor + this attempt's segments die now
       // (the retry re-merges and writes fresh ones); the moved data files
@@ -1314,7 +1407,7 @@ object VersionedTableImpl {
         else committedReferences(s, fs,
           if (pendingStage) lin.pending(root, newV) else lin.visible(root, newV),
           segName +: consolidated.toSeq)
-      if (raceVerdict.contains(true)) return newV // we won, response-lost
+      if (raceVerdict.contains(true)) return (newV, touched) // we won, response-lost
       fs.delete(tmp, true)
       if (raceVerdict.contains(false)) {
         deleteSegment(fs, root, segName)
@@ -1325,7 +1418,7 @@ object VersionedTableImpl {
           s"$what lost $maxAttempts optimistic attempts at $root (last target ${lin.prefix}$newV)")
       awaitOutcome(s, root, newV, staleClaimMs, lin)
     }
-    -1 // unreachable
+    (-1, Nil) // unreachable
   }
 
   /** General three-clause MERGE INTO the versioned table — the
@@ -1408,7 +1501,7 @@ object VersionedTableImpl {
                  else base.schema(c)).dataType))
               .when(upd || ins, col(s"src_$c"))
               .otherwise(col(s"tgt_$c")).as(c)): _*)
-    }
+    }._1
   }
 
   /** WRITE-AUDIT-PUBLISH: merge `env` as a STAGED version, run `audit`
@@ -2018,15 +2111,16 @@ object VersionedTableImpl {
 
   /** COMPACT the current version's over-fragmented buckets into a NEW
     * version with identical state — the versioned table's small-files
-    * maintenance: every [[commitMerge]] adds one file per touched bucket
-    * (history keeps the old ones), so a hot bucket's LIVE file count
-    * grows with the commit rate. The rewrite reads only over-threshold
-    * buckets (explicit pruned file list), lands each as one file per
-    * bucket, and commits through the same claim protocol — old versions
-    * still reference the old files, so time travel is untouched and
-    * vacuum reclaims them when their versions expire. Pure layout: the
-    * new version's state hash-equals its predecessor
-    * (StreamLakehouseSpec pins this). Returns Some(newVersion) or None
+    * maintenance: every [[commitMerge]] rewrites its touched buckets
+    * whole, but as one file per write task that held a bucket's rows, so
+    * a bucket's LIVE file count is its last rewrite's write fan-out. The
+    * over-threshold check is driver metadata (no Spark job). The rewrite
+    * reads only over-threshold buckets (explicit pruned file list), lands
+    * each as one file per bucket, and commits through the same claim
+    * protocol — old versions still reference the old files, so time
+    * travel is untouched and vacuum reclaims them when their versions
+    * expire. Pure layout: the new version's state hash-equals its
+    * predecessor (StreamLakehouseSpec pins this). Returns Some(newVersion) or None
     * when nothing is over threshold OR the claim was lost (the next
     * maintenance cadence retries).
     *
@@ -2051,9 +2145,18 @@ object VersionedTableImpl {
     if (v == 0) return None
     val nb = tableBuckets(s, root, nBuckets) // stored count wins
     import s.implicits._
-    val counts = manifest(s, root, v).groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n")).filter(col("n") > maxFiles)
-      .select(col("bucket")).as[Long].collect().toSeq.sorted // <= nBuckets
+    // the threshold check is driver metadata: live files per bucket from
+    // the descriptor and the (write-time cached) segment rows — no job
+    // when nothing is over, which is nearly every streaming epoch
+    val counts = descriptorPairs(s, root, v) match {
+      case Right(pairs) => liveRows(s, root, pairs, None)
+        .groupBy(_._1).collect { case (b, files) if files.size > maxFiles => b }
+        .toSeq.sorted
+      case Left(legacy) => resolveDescriptor(s, root, legacy)
+        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+        .filter(col("n") > maxFiles)
+        .select(col("bucket")).as[Long].collect().toSeq.sorted
+    }
     if (counts.isEmpty) return None
     val fs = fsOf(s, root)
     val newV = v + 1
@@ -2508,7 +2611,7 @@ object VersionedTableImpl {
       env: DataFrame, nBuckets: Int, maxAttempts: Int = 5,
       staleClaimMs: Long = 60000L): Int =
     commitMergeTo(s, root, env, nBuckets, maxAttempts, staleClaimMs,
-      pendingStage = false, branchLineage(name))
+      pendingStage = false, branchLineage(name))._1
 
   /** The branch head's state (tombstones filtered) — what an audit
     * validates before [[fastForward]] publishes it to main readers. */

@@ -74,7 +74,18 @@ object LakehouseSink {
     *     the new version (touched buckets only), then the marker — the
     *     marker is LAST, so any crash inside the gate replays the whole
     *     gate, and every step in it is idempotent (seq-gated merge,
-    *     per-version feed overwrite, marker create).
+    *     per-version feed overwrite, marker create). The feed's bucket
+    *     list is the one the WINNING commit attempt wrote, numbered under
+    *     that attempt's bucket count: a rebucket that takes the version
+    *     this batch first targeted cannot make the feed diff buckets of
+    *     the old numbering.
+    *
+    * The envelope batch is persisted for the commit, so the touched-bucket
+    * collect and the merge write evaluate the source once; it is
+    * unpersisted before returning, whatever happens. (The envelopes, not
+    * the latest-per-key reduction, are what is cached: caching the
+    * reduction hides its shuffle from AQE's partition coalescing, and the
+    * merge write then fans every bucket out over all shuffle partitions.)
     *
     * Compaction runs OUTSIDE the gate (a replayed batch re-checks the
     * pure-metadata threshold harmlessly); a compaction version is
@@ -84,7 +95,6 @@ object LakehouseSink {
       appId: String, nBuckets: Int, compactOver: Option[Int],
       emitFeed: Boolean, branch: Option[String] = None,
       legacyAppId: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions._
     val s = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -99,7 +109,11 @@ object LakehouseSink {
     val committed = fs.exists(marker) || legacyAppId.exists(l =>
       fs.exists(new org.apache.hadoop.fs.Path(root, s"_commits/$l/batch-$id")))
     if (!committed) {
-      branch match {
+      // a fanout has already persisted its batch for every leg: leave
+      // that cache (and its unpersist) to the fanout
+      val own = batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      if (own) batch.persist()
+      try branch match {
         case Some(b) =>
           // STAGED ingestion: every epoch commits to the branch; main
           // readers see nothing until an audited publishBranch/fastForward.
@@ -109,19 +123,14 @@ object LakehouseSink {
         case None =>
           if (emitFeed) // amortized O(1) probes per epoch (watermark below the scan)
             graft.ops.VersionedTableImpl.repairFeedsIncremental(s, root, nBuckets)
-          val before = graft.ops.VersionedTableImpl.currentVersion(s, root)
-          // the TABLE's bucket count (manifest-recorded), not the caller's
-          // parameter — a rebucketed table keeps streaming correctly
-          val nb = graft.ops.VersionedTableImpl.tableBuckets(s, root, nBuckets)
-          val v = graft.ops.VersionedTableImpl.commitMerge(s, root, batch, nBuckets)
-          if (emitFeed && v > before) {
-            val touched = batch
-              .select(pmod(coalesce(col("image.user_id"), col("oldImage.user_id")),
-                lit(nb.toLong)).as("bucket"))
-              .distinct().collect().map(_.getLong(0)).toSeq // <= nb rows
+          // the bucket count is the TABLE's (manifest-recorded, resolved
+          // per commit attempt), not the caller's parameter — a rebucketed
+          // table keeps streaming correctly
+          val (v, touched) =
+            graft.ops.VersionedTableImpl.commitMergeTouched(s, root, batch, nBuckets)
+          if (emitFeed && touched.nonEmpty)
             graft.ops.VersionedTableImpl.emitFeed(s, root, v, touched)
-          }
-      }
+      } finally if (own) batch.unpersist()
       fs.mkdirs(marker.getParent)
       fs.create(marker).close()
     }
@@ -165,17 +174,21 @@ object LakehouseSink {
     * commit, so a crash between the two re-commits once — state stays
     * correct, and at most one no-op version can ever exist per crash.
     *
-    * MAINTENANCE rides the same hook: every merge appends one file per
-    * touched bucket to the LIVE file set (history keeps the old ones), so
-    * a hot bucket's read cost grows one parquet footer per epoch — the
-    * streaming small-files curve. With `compactOver = Some(t)`, each
+    * MAINTENANCE rides the same hook. Every merge rewrites each touched
+    * bucket WHOLE (the new manifest drops the bucket's previous files;
+    * history keeps them), but as one file per write task that held the
+    * bucket's rows — so a bucket's live file count is the last rewrite's
+    * write fan-out (shuffle partitions AQE did not coalesce, a
+    * `maxRecordsPerFile` cap), and every file is one more footer for the
+    * next epoch's merge and feed reads. With `compactOver = Some(t)`, each
     * commit is followed by [[graft.ops.VersionedTableImpl.compactVersion]]
     * which, when any bucket's live file count exceeds t, rewrites just
-    * those buckets as a NEW state-identical version (stage-then-swap, the
-    * claim protocol, old versions untouched). The check is pure metadata;
-    * a replayed batch re-runs it harmlessly (counts already below the
-    * threshold ⇒ no-op), so compaction is exactly-once-in-effect across
-    * restarts without its own marker.
+    * those buckets as a NEW state-identical version, one file each
+    * (stage-then-swap, the claim protocol, old versions untouched). The
+    * check is driver-side metadata and runs no Spark job; a replayed batch
+    * re-runs it harmlessly (counts already below the threshold ⇒ no-op),
+    * so compaction is exactly-once-in-effect across restarts without its
+    * own marker.
     *
     * With `emitFeed = true` (default) each merge commit also materializes
     * its CHANGE DATA FILES under `root/_feed/v{N}.parquet`

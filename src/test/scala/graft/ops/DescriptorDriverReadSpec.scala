@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,6 +15,10 @@ import graft.SparkSpec
   * None fallback for anything it cannot parse (legacy flat manifests).
   * Both writer eras are pinned: ManifestIo's own writer AND Spark's
   * parquet writer (the restore/branch copy path through round 15).
+  *
+  * The bucket-scoped commit paths go further and resolve COW segment rows
+  * and read schemas driver-side too; those are pinned against the
+  * distributed resolution and `mergeSchema` inference they replaced.
   */
 class DescriptorDriverReadSpec extends SparkSpec {
   import spark.implicits._
@@ -75,6 +80,56 @@ class DescriptorDriverReadSpec extends SparkSpec {
       .toDF("bucket", "file", "bytes")
       .coalesce(1).write.mode("overwrite").parquet(p.toString)
     assert(ManifestIo.readDescriptorRows(conf, fs(p), p).isEmpty)
+  }
+
+  test("driver-side COW segment resolution equals the distributed read: both segment forms, every mask") {
+    val root = java.nio.file.Files.createTempDirectory("desc_seg").toString
+    val fileRows = (0 until 12).map(i =>
+      ((i % 4).toLong, s"file:/t/data/bucket=${i % 4}/v1-f$i.parquet", 100L + i))
+    // a ManifestIo single-file segment and a Spark-written directory one
+    val single = VersionedTableImpl.writeSegmentRows(spark, root, fileRows.take(6))
+    val dir = VersionedTableImpl.writeSegment(spark, root,
+      fileRows.drop(6).toDF("bucket", "file", "bytes"))
+    assert(VersionedTableImpl.segmentRows(spark, root, single) == fileRows.take(6),
+      "the write-time cache entry holds the rows written")
+    val masks: Seq[Option[Seq[Long]]] = Seq(None, Some(Seq(1L, 3L)), Some(Nil))
+    val wants: Seq[Option[Seq[Long]]] = Seq(None, Some(Seq(0L, 1L)), Some(Seq(2L)), Some(Nil))
+    val cases = (for (seg <- Seq(single, dir); m <- masks) yield Seq((seg, m))) :+
+      Seq((single, Some(Seq(0L, 1L))), (dir, None))
+    for (pairs <- cases; want <- wants) {
+      ManifestIo.MetaCache.clear() // the driver READ, not the cache entry
+      val driver = VersionedTableImpl.liveRows(spark, root, pairs, want).sorted
+      val distributed = VersionedTableImpl.resolveFromPairs(spark, root, pairs, None, want)
+        .select(col("bucket"), col("file"), col("bytes"))
+        .as[(Long, String, Long)].collect().toSeq.sorted
+      assert(driver == distributed, s"pairs=$pairs buckets=$want")
+    }
+  }
+
+  test("readBuckets' explicit schema equals mergeSchema inference across two payload eras") {
+    val root = java.nio.file.Files.createTempDirectory("desc_era").toString
+    def env(ids: Seq[Int]) = graft.cdc.CdcSynth.envelope(ids.map { i =>
+      (i.toLong, (i % 13).toLong, s"t${i % 3}", i / 2.0,
+        new java.sql.Timestamp(1700000000000L + i * 1000L), s"""{"k":$i}""")
+    }.toDF("event_id", "user_id", "event_type", "value", "ts", "props"))
+    VersionedTableImpl.commitMerge(spark, root, env(0 until 60), 4)
+    // era 2 carries a NEW image column and touches buckets 0 and 1 only
+    val evolved = env((60 until 120).filter(i => (i % 13) % 4 < 2))
+      .withColumn("image", col("image").withField("src",
+        concat(lit("s"), col("event_id").cast("string"))))
+    assert(VersionedTableImpl.commitMerge(spark, root, evolved, 4) == 2)
+    val all = Seq(0L, 1L, 2L, 3L)
+    val files = VersionedTableImpl.filesOf(spark, root, 2, Some(all))
+    assert(files.map(f => spark.read.parquet(f).schema).distinct.size == 2,
+      "fixture: the buckets hold files of two payload eras")
+    ManifestIo.MetaCache.clear()
+    val explicit = VersionedTableImpl.readBuckets(spark, root, 2, all,
+      LakehouseOpsImpl.tableSchema)
+    val inferred = spark.read.option("mergeSchema", "true").parquet(files: _*)
+    assert(explicit.schema == inferred.schema)
+    assert(explicit.schema.fieldNames.last == "src")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(rows(explicit) == rows(inferred))
   }
 
   test("missing path returns None (callers fall back loudly downstream)") {
