@@ -7,6 +7,14 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+/** A manifest artifact at `path` that reads cleanly but is not what its
+  * name says it is — a descriptor without a `segment` value, or a MOR
+  * descriptor row carrying a bucket mask. Raised instead of guessing at
+  * the content: I/O failures keep their own types. */
+private[ops] final class CorruptManifest(val path: Path, val reason: String)
+  extends IllegalStateException(s"corrupt manifest $path: $reason")
 
 /** Driver-side parquet serialization for the lakehouse's TINY manifest
   * artifacts — version descriptors (O(live segments) rows) and
@@ -18,20 +26,21 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * `_SUCCESS`-marker directory dance) per write — measured at roughly half
   * the layered commit's wall-clock constant on the bench's lakehouse
   * fixtures. `ParquetWriter` over the same Hadoop `FileSystem` produces an
-  * equivalent single parquet FILE in one round of driver I/O. The commit
-  * paths read these artifacts back driver-side too (descriptors, COW and
-  * MOR segment rows — [[readDescriptorRows]], [[readCowSegmentRows]],
-  * [[readMorSegmentRows]]); the full-version read and vacuum still scan
-  * segments with `spark.read.parquet(path)`. Every reader accepts a bare
-  * file as readily as a Spark-written directory, so old (directory-form)
-  * and new (file-form) manifests coexist in one table's history.
+  * equivalent single parquet FILE in one round of driver I/O.
+  *
+  * Every descriptor is read back through ONE driver-side reader,
+  * [[readDescriptorRows]]; COW and MOR segment rows through
+  * [[readCowSegmentRows]] and [[readMorSegmentRows]]. The full-version
+  * read and vacuum scan segments with `spark.read.schema(...)` over the
+  * segment schemas below, so no read infers a schema. Every reader
+  * accepts a bare file as readily as a Spark-written directory: manifests
+  * and MOR fat-carry segments are directories with one part file inside.
   *
   * The schemas here MUST stay read-compatible with the Spark-written
   * equivalents ([[VersionedTableImpl.descriptorSchema]], the COW/MOR
   * segment columns): same names, int64/UTF8 physical types, and the
   * STANDARD 3-level LIST layout for `buckets` (what Spark itself writes
-  * with `spark.sql.parquet.writeLegacyFormat=false`, its default), so
-  * `mergeSchema` unions across eras resolve cleanly.
+  * with `spark.sql.parquet.writeLegacyFormat=false`, its default).
   */
 private[ops] object ManifestIo {
 
@@ -105,6 +114,17 @@ private[ops] object ManifestIo {
       |  optional int64 max_key;
       |  optional int64 bytes;
       |}""".stripMargin)
+
+  /** The Spark read schemas of the two segment kinds — the columns of
+    * [[cowSegment]] and [[morSegment]]. Passing them to `spark.read`
+    * plans a segment scan without schema inference, which is a job. */
+  val cowSegmentSchema: StructType = StructType(Seq(
+    StructField("bucket", LongType), StructField("file", StringType),
+    StructField("bytes", LongType)))
+  val morSegmentSchema: StructType = StructType(Seq(
+    StructField("bucket", LongType), StructField("file", StringType),
+    StructField("kind", StringType), StructField("min_key", LongType),
+    StructField("max_key", LongType), StructField("bytes", LongType)))
 
   /** `path` is the manifest ROOT — the part file goes INSIDE it, matching
     * Spark's directory-form output (minus the `_SUCCESS` marker). The
@@ -192,137 +212,99 @@ private[ops] object ManifestIo {
     } finally rd.close()
   } catch { case _: Exception => None }
 
-  /** Driver-side read-back of a MOR DESCRIPTOR (segment, buckets) —
-    * None when the artifact is not the degenerate MOR form (a legacy
-    * flat manifest, a masked/bucketed row, any read hiccup): callers
-    * fall back to the distributed resolution. `path` may be the bare
-    * file or a Spark-written directory. */
-  def readMorDescriptorSegments(conf: Configuration,
-      fs: org.apache.hadoop.fs.FileSystem, path: Path): Option[Seq[String]] =
-    try {
-      val out = Seq.newBuilder[String]
-      partsOf(fs, path).foreach { p =>
-        readGroups(conf, p) { g =>
-          if (g.getType.containsField("buckets") &&
-              g.getFieldRepetitionCount("buckets") > 0)
-            return None // masked row: not the degenerate MOR form
-          out += g.getString("segment", 0)
-        }
-      }
-      Some(out.result())
-    } catch { case _: Exception => None }
-
-  /** Segment names of ANY layered descriptor (COW or MOR) — driver-side,
-    * one footer-and-page read. None on any hiccup, including a legacy
-    * flat manifest (no `segment` column): callers treat None as "cannot
-    * tell" and act conservatively. */
+  /** Segment names of ANY descriptor (COW or MOR) — the
+    * [[readDescriptorRows]] read, None on any failure. This is the
+    * tri-state "cannot tell" of [[VersionedTableImpl.committedReferences]]:
+    * its callers strand staged segments on None rather than delete them. */
   def readDescriptorSegmentNames(conf: Configuration,
       fs: org.apache.hadoop.fs.FileSystem, path: Path): Option[Seq[String]] =
-    try {
-      val out = Seq.newBuilder[String]
-      partsOf(fs, path).foreach { p =>
-        readGroups(conf, p) { g => out += g.getString("segment", 0) }
-      }
-      Some(out.result())
-    } catch { case _: Exception => None }
+    try Some(readDescriptorRows(conf, fs, path)._1.map(_._1))
+    catch { case _: Exception => None }
 
-  /** Driver-side read of a FULL layered descriptor — the (segment,
-    * buckets) rows plus the constant nbuckets column — replacing a Spark
-    * `read.parquet(...).collect()` job on every manifest resolution
-    * (round-16: the lake entries ran 10-15 such metadata jobs each; a
-    * descriptor is O(live segments) driver metadata by design, so a
-    * distributed read of it was pure scheduling overhead). Mirrors
+  /** Driver-side read of a version DESCRIPTOR — the (segment, buckets)
+    * rows plus the constant nbuckets column. A descriptor is O(live
+    * segments) driver metadata by design, so every manifest resolution
+    * reads it here instead of scheduling a Spark job. Mirrors
     * [[writeDescriptor]]'s encoding AND Spark's own writer (both emit the
     * standard 3-level LIST with `list`/`element` names — the file-header
     * note above): buckets field unset → None (the "all buckets" mask),
     * set-but-empty → Some(Nil), nbuckets from the first row when the
-    * schema carries it. None on ANY hiccup — legacy flat manifests (no
-    * `segment` field), unexpected nulls, short reads — and callers fall
-    * back to the distributed path, the [[readMorSegmentRows]] discipline. */
+    * schema carries it (COW descriptors; MOR ones carry none).
+    *
+    * Failures are loud and keep their type: an I/O error propagates as
+    * thrown (a `FileNotFoundException` stays one — the vacuum-race
+    * retries match on it), and a file that reads cleanly but has no
+    * `segment` value in some row raises [[CorruptManifest]]. */
   def readDescriptorRows(conf: Configuration,
       fs: org.apache.hadoop.fs.FileSystem, path: Path):
-      Option[(Vector[(String, Option[Seq[Long]])], Option[Long])] =
-    try {
-      val out = Vector.newBuilder[(String, Option[Seq[Long]])]
-      var nb: Option[Long] = None
-      var first = true
-      partsOf(fs, path).foreach { p =>
-        readGroups(conf, p) { g =>
-          val t = g.getType
-          if (!t.containsField("segment") || g.getFieldRepetitionCount("segment") == 0)
-            return None // legacy flat manifest (or null segment): not ours
-          val seg = g.getString("segment", 0)
-          val bks: Option[Seq[Long]] =
-            if (!t.containsField("buckets") || g.getFieldRepetitionCount("buckets") == 0)
-              None
-            else {
-              val lst = g.getGroup("buckets", 0)
-              val n = lst.getFieldRepetitionCount("list")
-              Some((0 until n).map(i => lst.getGroup("list", i).getLong("element", 0)))
-            }
-          if (first) {
-            first = false
-            nb =
-              if (t.containsField("nbuckets") && g.getFieldRepetitionCount("nbuckets") > 0)
-                Some(g.getLong("nbuckets", 0))
-              else None
+      (Vector[(String, Option[Seq[Long]])], Option[Long]) = {
+    val out = Vector.newBuilder[(String, Option[Seq[Long]])]
+    var nb: Option[Long] = None
+    var first = true
+    partsOf(fs, path).foreach { p =>
+      readGroups(conf, p) { g =>
+        val t = g.getType
+        if (!t.containsField("segment") || g.getFieldRepetitionCount("segment") == 0)
+          throw new CorruptManifest(path, "a row has no segment: not a version descriptor")
+        val seg = g.getString("segment", 0)
+        val bks: Option[Seq[Long]] =
+          if (!t.containsField("buckets") || g.getFieldRepetitionCount("buckets") == 0)
+            None
+          else {
+            val lst = g.getGroup("buckets", 0)
+            val n = lst.getFieldRepetitionCount("list")
+            Some((0 until n).map(i => lst.getGroup("list", i).getLong("element", 0)))
           }
-          out += ((seg, bks))
+        if (first) {
+          first = false
+          nb =
+            if (t.containsField("nbuckets") && g.getFieldRepetitionCount("nbuckets") > 0)
+              Some(g.getLong("nbuckets", 0))
+            else None
         }
+        out += ((seg, bks))
       }
-      Some((out.result(), nb))
-    } catch { case _: Exception => None }
+    }
+    (out.result(), nb)
+  }
 
   /** Driver-side read of COW segment rows `(bucket, file, bytes)` — a
-    * [[writeCowSegment]] file or a Spark-written directory segment (the
-    * legacy consolidation form, whose `bucket` may be int32 and whose
-    * `bytes` may be absent: read as 0, what the distributed resolution
-    * backfills). Unlike the descriptor read this never degrades to a
-    * distributed read: a segment that cannot be read is an I/O error of
-    * the commit path and propagates as one. */
+    * [[writeCowSegment]] file or a Spark-written directory segment. A
+    * segment that cannot be read is an I/O error of the commit path and
+    * propagates as one. */
   def readCowSegmentRows(conf: Configuration,
       fs: org.apache.hadoop.fs.FileSystem, path: Path): Vector[(Long, String, Long)] = {
     val out = Vector.newBuilder[(Long, String, Long)]
     partsOf(fs, path).foreach { p =>
       readGroups(conf, p) { g =>
-        val by =
-          if (g.getType.containsField("bytes") &&
-              g.getFieldRepetitionCount("bytes") > 0) integral(g, "bytes")
-          else 0L
-        out += ((integral(g, "bucket"), g.getString("file", 0), by))
+        out += ((g.getLong("bucket", 0), g.getString("file", 0), g.getLong("bytes", 0)))
       }
     }
     out.result()
   }
 
-  private def integral(g: org.apache.parquet.example.data.Group,
-      field: String): Long =
-    g.getType.getType(field).asPrimitiveType.getPrimitiveTypeName match {
-      case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-        g.getInteger(field, 0).toLong
-      case _ => g.getLong(field, 0)
-    }
-
   /** Driver-side read-back of MOR segment rows — None past `maxRows`
-    * (the scale guard: a legacy million-file segment stays a distributed
-    * read) or on any missing/null field. */
+    * (the scale guard: a fat carry segment stays a distributed read) or
+    * on a null field, which only a Spark-written fat-carry segment can
+    * hold. I/O errors propagate. */
   def readMorSegmentRows(conf: Configuration,
       fs: org.apache.hadoop.fs.FileSystem, path: Path, maxRows: Int):
-      Option[Vector[(Long, String, String, Long, Long, Long)]] =
-    try {
-      val out = Vector.newBuilder[(Long, String, String, Long, Long, Long)]
-      var n = 0
-      partsOf(fs, path).foreach { p =>
-        readGroups(conf, p) { g =>
-          n += 1
-          if (n > maxRows) return None
-          out += ((g.getLong("bucket", 0), g.getString("file", 0),
-            g.getString("kind", 0), g.getLong("min_key", 0),
-            g.getLong("max_key", 0), g.getLong("bytes", 0)))
-        }
+      Option[Vector[(Long, String, String, Long, Long, Long)]] = {
+    val out = Vector.newBuilder[(Long, String, String, Long, Long, Long)]
+    var n = 0
+    partsOf(fs, path).foreach { p =>
+      readGroups(conf, p) { g =>
+        n += 1
+        if (n > maxRows ||
+            morSegmentSchema.fieldNames.exists(f => g.getFieldRepetitionCount(f) == 0))
+          return None
+        out += ((g.getLong("bucket", 0), g.getString("file", 0),
+          g.getString("kind", 0), g.getLong("min_key", 0),
+          g.getLong("max_key", 0), g.getLong("bytes", 0)))
       }
-      Some(out.result())
-    } catch { case _: Exception => None }
+    }
+    Some(out.result())
+  }
 
   private def partsOf(fs: org.apache.hadoop.fs.FileSystem,
       path: Path): Seq[Path] = {

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.{Q, Tables}
 import graft.cdc.CdcSynth
@@ -51,57 +50,36 @@ import graft.cdc.CdcSynth
 object MorTableImpl {
 
   import VersionedTableImpl.{fsOf, visiblePath, claimVersion, awaitOutcome,
-    currentVersion, manifestCommitted, manifestDataPath, descriptorPairs,
-    writeSegment, deleteSegment, resolveDescriptor}
+    currentVersion, manifestCommitted, manifestDataPath, writeSegment,
+    deleteSegment}
+
+  /** Segment names of version v's descriptor (Nil for v = 0), read on
+    * the driver. A MOR descriptor is the degenerate whole-segment form —
+    * every row is (segment, null): a delta commit appends ONE row,
+    * compaction consolidates — so a masked row is a [[CorruptManifest]]. */
+  private def morSegments(s: SparkSession, root: String, v: Int): Seq[String] =
+    if (v == 0) Nil
+    else {
+      val fs = fsOf(s, root)
+      val p = manifestDataPath(fs, visiblePath(root, v)).getOrElse(
+        // fail LOUDLY: a missing manifest for a committed-range version is
+        // corruption or a bad argument, never an empty table
+        throw new IllegalStateException(
+          s"MOR manifest for v$v not found under $root/_versions"))
+      ManifestIo.readDescriptorRows(s.sparkContext.hadoopConfiguration, fs, p)
+        ._1.map {
+          case (seg, None) => seg
+          case (seg, Some(_)) =>
+            throw new CorruptManifest(p, s"MOR descriptor row for $seg has a bucket mask")
+        }
+    }
 
   /** Flat (bucket, file, kind, min_key, max_key, bytes) rows of version
     * v's manifest, resolved through the layered descriptor (see
-    * [[VersionedTableImpl]]'s layering note). A MOR descriptor is the
-    * degenerate whole-segment form — every row is (segment, null): a
-    * delta commit appends ONE row, compaction consolidates. */
+    * [[VersionedTableImpl]]'s layering note); planned with no Spark job. */
   private def manifestMor(s: SparkSession, root: String, v: Int): DataFrame =
-    if (v == 0)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(Seq(
-        StructField("bucket", LongType), StructField("file", StringType),
-        StructField("kind", StringType),
-        StructField("min_key", LongType), StructField("max_key", LongType),
-        StructField("bytes", LongType))))
-    else manifestDataPath(fsOf(s, root), visiblePath(root, v)) match {
-      case Some(p) =>
-        // driver-side fast path (Versioned.descriptorPairs note): the
-        // descriptor is metadata-sized; fall back to the distributed read
-        // for anything readDescriptorRows cannot parse
-        ManifestIo.readDescriptorRows(
-            s.sparkContext.hadoopConfiguration, fsOf(s, root), p) match {
-          case Some((rows, nb)) =>
-            VersionedTableImpl.resolveFromPairs(s, root, rows, nb, None)
-          case None => resolveDescriptor(s, root, s.read.parquet(p.toString))
-        }
-      case None => // fail LOUDLY: a missing manifest for a committed-range
-        // version is corruption or a bad argument, never an empty table
-        throw new IllegalStateException(
-          s"MOR manifest for v$v not found under $root/_versions")
-    }
-
-  /** The descriptor rows of version v to CARRY into v+1 — collected
-    * metadata (O(segments)); a legacy flat manifest consolidates into one
-    * explicit segment on first contact. The second member names that
-    * freshly written consolidation segment (if any) so a lost attempt can
-    * delete it — otherwise every retry against a legacy manifest would
-    * leak one full-size metadata rewrite. */
-  private def carriedDesc(s: SparkSession, root: String,
-      v: Int): (Seq[(String, Option[Seq[Long]])], Option[String]) =
-    if (v == 0) (Nil, None)
-    else descriptorPairs(s, root, v) match {
-      case Right(pairs) => (pairs, None)
-      case Left(legacy) =>
-        val rows = (if (legacy.columns.contains("bytes")) legacy
-                    else legacy.withColumn("bytes", lit(0L)))
-          .select(col("bucket"), col("file"), col("kind"),
-            col("min_key"), col("max_key"), col("bytes"))
-        val cs = writeSegment(s, root, rows)
-        (Seq((cs, None)), Some(cs))
-    }
+    VersionedTableImpl.resolveFromPairs(s, root,
+      morSegments(s, root, v).map(_ -> None), None, None, ManifestIo.morSegmentSchema)
 
   /** ZONE MAPS: per-file [min_key, max_key] over the staged files, one
     * narrow column scan before the move (a real deployment lifts these
@@ -169,8 +147,6 @@ object MorTableImpl {
     } finally fs.delete(staging, true)
   }
 
-  private val segCols = Seq("bucket", "file", "kind", "min_key", "max_key", "bytes")
-
   /** [[writeSegment]] for DRIVER-RESIDENT MOR rows (a delta commit's own
     * files, a compaction's fresh base): one [[ManifestIo]] ParquetWriter
     * pass, no Spark job, a single-FILE segment — the same trickle-commit
@@ -236,11 +212,11 @@ object MorTableImpl {
       // (one per live segment) + ONE new row — never the carried file
       // rows, which at a million uncompacted files would re-serialize a
       // million-row manifest per trickle commit (the round-11 weak #1)
-      val (carried, consolidated) = carriedDesc(s, root, v)
+      val carried = morSegments(s, root, v)
       val tmp = new Path(root,
         s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
       VersionedTableImpl.writeDescriptorFile(s, tmp,
-        carried :+ ((segName, None: Option[Seq[Long]])), None)
+        (carried :+ segName).map(_ -> None), None)
       val claimed = VersionedTableImpl.claimVersionId(
         s, root, newV, staleClaimMs)
       var beaten = false
@@ -285,20 +261,14 @@ object MorTableImpl {
         }
       }
       // lost: delta files + delta segment stay valid (commits commute);
-      // only the descriptor — and any legacy consolidation written for
-      // this attempt — dies before the re-base retry. A BEATEN publish
-      // first checks whether the "racer" was us (response-lost PUT with
-      // failing read-backs — the committed descriptor then references
-      // OUR delta segment): ours → the commit stands; unreadable → keep
-      // the consolidation (strand; vacuum reclaims a dead one).
-      val raceVerdict: Option[Boolean] =
-        if (!beaten) Some(false)
-        else VersionedTableImpl.committedReferences(s, fs,
-          visiblePath(root, newV), segName +: consolidated.toSeq)
-      if (raceVerdict.contains(true)) return newV // we won, response-lost
+      // only the descriptor dies before the re-base retry. A BEATEN
+      // publish first checks whether the "racer" was us (response-lost
+      // PUT with failing read-backs — the committed descriptor then
+      // references OUR delta segment): ours → the commit stands.
+      if (beaten && VersionedTableImpl.committedReferences(s, fs,
+          visiblePath(root, newV), Seq(segName)).contains(true))
+        return newV // we won, response-lost
       fs.delete(tmp, true)
-      if (raceVerdict.contains(false))
-        consolidated.foreach(deleteSegment(fs, root, _))
       if (attempt >= maxAttempts)
         throw new IllegalStateException(
           s"commitAppend lost $maxAttempts optimistic attempts at $root")
@@ -453,9 +423,9 @@ object MorTableImpl {
     // artifacts: ZERO Spark jobs for metadata, which is what keeps the
     // triggering commit's p99 flat (MorAutoCompactLatencySpec — the three
     // metadata jobs, not the data rewrite, dominated the scoped fold).
-    // Tables past the driver caps (a never-compacted million-file legacy)
-    // keep the distributed resolution, cached so counts/files/carried
-    // share one segment scan.
+    // Tables past the driver caps (a never-compacted million-file table,
+    // or a fat carry segment holding nulls) keep the distributed
+    // resolution, cached so counts/files/carried share one segment scan.
     driverMetaRows(s, fs, root, v) match {
       case Some(rows) =>
         foldCommit(s, fs, root, v, maxFiles, nBuckets, staleClaimMs,
@@ -478,7 +448,7 @@ object MorTableImpl {
             // O(batch). Small carried sets go through the driver
             // ParquetWriter; only a genuinely fat one pays a Spark write.
             val keepRows = m.filter(!col("bucket").isin(over.toSeq: _*))
-              .select(segCols.map(col): _*)
+              .select(ManifestIo.morSegmentSchema.fieldNames.map(col).toSeq: _*)
             val rows = keepRows.limit(10001).collect()
             if (rows.length > 10000 ||
                 rows.exists(r => (0 until 6).exists(r.isNullAt)))
@@ -494,36 +464,31 @@ object MorTableImpl {
   /** All file rows of version v, resolved driver-side from the
     * ManifestIo-written artifacts (descriptor + segments — each one
     * footer-plus-page round-trip, no Spark job). None past the scale caps
-    * (512 segments / 20k file rows), for legacy flat manifests, masked
-    * descriptor rows, or any read hiccup — callers fall back to the
-    * distributed resolution. */
+    * (512 segments / 20k file rows) or for a segment with a null field
+    * ([[ManifestIo.readMorSegmentRows]]): the caller then takes the
+    * distributed resolution. Read failures and a [[CorruptManifest]]
+    * propagate. */
   private def driverMetaRows(s: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String,
       v: Int): Option[Vector[(Long, String, String, Long, Long, Long)]] = {
     val conf = s.sparkContext.hadoopConfiguration
-    manifestDataPath(fs, visiblePath(root, v)).flatMap { mp =>
-      ManifestIo.readMorDescriptorSegments(conf, fs, mp).flatMap { segs =>
-        if (segs.size > 512) None
-        else {
-          val out = Vector.newBuilder[(Long, String, String, Long, Long, Long)]
-          var budget = 20000
-          val it = segs.iterator
-          while (it.hasNext) {
-            val sp = new Path(VersionedTableImpl.segmentsDir(root), it.next())
-            val cached = ManifestIo.MetaCache
-              .get[Vector[(Long, String, String, Long, Long, Long)]](s"morseg|$sp")
-            cached.orElse(ManifestIo.readMorSegmentRows(conf, fs, sp, budget)
-              .map { rows => ManifestIo.MetaCache.put(s"morseg|$sp", rows); rows })
-            match {
-              case Some(rows) if rows.size <= budget =>
-                out ++= rows; budget -= rows.size
-              case _ => return None
-            }
-          }
-          Some(out.result())
-        }
+    val segs = morSegments(s, root, v)
+    if (segs.size > 512) return None
+    val out = Vector.newBuilder[(Long, String, String, Long, Long, Long)]
+    var budget = 20000
+    segs.foreach { seg =>
+      val sp = new Path(VersionedTableImpl.segmentsDir(root), seg)
+      val cached = ManifestIo.MetaCache
+        .get[Vector[(Long, String, String, Long, Long, Long)]](s"morseg|$sp")
+      cached.orElse(ManifestIo.readMorSegmentRows(conf, fs, sp, budget)
+        .map { rows => ManifestIo.MetaCache.put(s"morseg|$sp", rows); rows })
+      match {
+        case Some(rows) if rows.size <= budget =>
+          out ++= rows; budget -= rows.size
+        case _ => return None
       }
     }
+    Some(out.result())
   }
 
   /** The fold itself, metadata-source-agnostic: pick the over-threshold

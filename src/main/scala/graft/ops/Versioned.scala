@@ -547,12 +547,10 @@ object VersionedTableImpl {
   private[ops] def segmentsDir(root: String) = new Path(root, "_versions/_segments")
 
   /** Write per-file manifest rows as one immutable SEGMENT; returns its
-    * name. O(rows) — the caller guarantees rows ≈ the commit's own files
-    * (or, for consolidations, the amortization point's carried set).
-    * This DataFrame form (a Spark job, a directory-form segment) remains
-    * for rows that live in the cluster — legacy consolidations and MOR
-    * compaction carries can be O(all live files); the per-commit hot
-    * paths use [[writeSegmentRows]] instead. */
+    * name. This DataFrame form (a Spark job, a directory-form segment)
+    * remains for rows that live in the cluster — MOR compaction's fat
+    * carried set can be O(all live files); the per-commit hot paths use
+    * [[writeSegmentRows]] instead. */
   private[ops] def writeSegment(s: SparkSession, root: String,
       rows: DataFrame): String = {
     val name = s"seg-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet"
@@ -584,8 +582,7 @@ object VersionedTableImpl {
     * write-time cache entry, else one [[ManifestIo.readCowSegmentRows]]
     * (cached in turn — segments are write-once under uuid names). Every
     * COW segment is born from driver-resident rows (a commit's own moved
-    * files, or a legacy consolidation of a manifest that was itself
-    * driver-collected), so it is driver-sized by construction. */
+    * files), so it is driver-sized by construction. */
   private[ops] def segmentRows(s: SparkSession, root: String,
       name: String): Vector[(Long, String, Long)] = {
     val path = new Path(segmentsDir(root), name)
@@ -633,11 +630,10 @@ object VersionedTableImpl {
     StructField("segment", StringType),
     StructField("buckets", org.apache.spark.sql.types.ArrayType(LongType))))
 
-  /** The RAW committed artifact of version v: descriptor rows (new era) or
-    * per-file rows (legacy, detected by a `file` column); empty descriptor
-    * frame when the manifest does not exist. `v = 0` is EXISTENCE-probed,
-    * not assumed empty: main has no v0, but a BRANCH's v0 is its real fork
-    * manifest (the RefsSpec branchDiff lesson). */
+  /** The RAW committed descriptor of version v as a DataFrame; empty
+    * descriptor frame when the manifest does not exist. `v = 0` is
+    * EXISTENCE-probed, not assumed empty: main has no v0, but a BRANCH's
+    * v0 is its real fork manifest (the RefsSpec branchDiff lesson). */
   private[ops] def descriptorDf(s: SparkSession, root: String, v: Int,
       lin: Lineage = Main): DataFrame =
     manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
@@ -646,74 +642,35 @@ object VersionedTableImpl {
         s.createDataFrame(s.sparkContext.emptyRDD[Row], descriptorSchema)
     }
 
-  /** Descriptor rows collected to the driver — O(live segments) metadata,
-    * what the commit paths carry forward. Left(df) = a legacy file-rows
-    * manifest (pre-layering era) the caller must consolidate once.
-    *
-    * Fast path (round 16): the descriptor is read DRIVER-SIDE
-    * ([[ManifestIo.readDescriptorRows]]) — a descriptor is metadata-sized
-    * by design, and the previous Spark `collect()` paid a full scheduled
-    * job (plus AQE planning) per resolution, 10-15 such jobs per lake
-    * maintenance entry. Any read hiccup (including a legacy flat
-    * manifest) falls back to the distributed read below. */
-  private[ops] def descriptorPairs(s: SparkSession, root: String, v: Int,
-      lin: Lineage = Main): Either[DataFrame, Seq[(String, Option[Seq[Long]])]] = {
-    manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
-      case None => return Right(Nil) // no manifest: the empty table
-      case Some(p) =>
-        ManifestIo.readDescriptorRows(
-            s.sparkContext.hadoopConfiguration, fsOf(s, root), p)
-          .foreach { case (rows, _) => return Right(rows) }
-    }
-    val df = descriptorDf(s, root, v, lin)
-    if (df.columns.contains("file")) Left(df)
-    else Right(df.select(col("segment"), col("buckets")).collect().toSeq
-      .map(r => (r.getString(0), Option(r.getSeq[Long](1)).map(_.toSeq))))
+  /** Version v's descriptor rows and nbuckets, read on the driver
+    * ([[ManifestIo.readDescriptorRows]]); None when the manifest does not
+    * exist (probed, like [[descriptorDf]]). Read failures propagate. */
+  private def descriptorAt(s: SparkSession, root: String, v: Int,
+      lin: Lineage): Option[(Vector[(String, Option[Seq[Long]])], Option[Long])] = {
+    val fs = fsOf(s, root)
+    manifestDataPath(fs, lin.visible(root, v)).map(p =>
+      ManifestIo.readDescriptorRows(s.sparkContext.hadoopConfiguration, fs, p))
   }
 
-  /** Resolve a descriptor frame to flat per-file manifest rows
-    * (bucket, file, bytes[, kind, zone maps][, nbuckets]) as a DataFrame —
-    * the distributed form, for the legacy (flat or undecodable) manifests
-    * the driver-side descriptor read rejects and for the WAP audit's
-    * pending manifest. `buckets` prunes both the segment list and the
-    * rows. Legacy file-rows manifests pass through (bytes backfilled 0). */
-  private[ops] def resolveDescriptor(s: SparkSession, root: String,
-      desc: DataFrame, buckets: Option[Seq[Long]] = None): DataFrame = {
-    if (desc.columns.contains("file")) { // legacy flat manifest
-      val withBytes =
-        if (desc.columns.contains("bytes")) desc
-        else desc.withColumn("bytes", lit(0L))
-      return buckets.fold(withBytes)(bs =>
-        withBytes.filter(col("bucket").isin(bs: _*)))
-    }
-    // ONE collect serves both the segment list and the constant nbuckets
-    // column — this runs per manifest() resolution, so a second driver
-    // job here would double metadata latency on every read/commit path
-    val hasNb = desc.columns.contains("nbuckets")
-    val rows =
-      (if (hasNb) desc.select(col("segment"), col("buckets"), col("nbuckets"))
-       else desc.select(col("segment"), col("buckets"))).collect()
-    val nb: Option[Long] =
-      if (!hasNb) None
-      else rows.headOption.flatMap(r =>
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))
-    val pairs0 = rows.toSeq.map(r =>
-      (r.getString(0), Option(r.getSeq[Long](1)).map(_.toSeq)))
-    resolveFromPairs(s, root, pairs0, nb, buckets)
-  }
+  /** Version v's descriptor rows (Nil when it has no manifest) —
+    * O(live segments) metadata, what the commit paths carry forward. */
+  private[ops] def descriptorPairs(s: SparkSession, root: String, v: Int,
+      lin: Lineage = Main): Seq[(String, Option[Seq[Long]])] =
+    descriptorAt(s, root, v, lin).fold(Seq.empty[(String, Option[Seq[Long]])])(_._1)
 
   /** Descriptor pairs → flat file rows as a DATAFRAME: prune segments,
-    * scan them, mask to the descriptor's current buckets with a broadcast
-    * join. This is the FULL-VERSION read path ([[manifest]] feeding
-    * [[readManifest]]'s semi-join, the maintenance aggregates), where the
-    * file rows stay in the plan and never pass through the driver.
-    * Bucket-scoped commit paths resolve the same rows driver-side instead
-    * ([[liveRows]] via [[filesOf]]) and run no job. `pairs0`/`nb` arrive
-    * from the driver-side descriptor read or from the distributed collect
-    * above (legacy fallback). */
+    * scan them with the known `segSchema` (COW by default; MOR passes its
+    * six columns), mask to the descriptor's current buckets with a
+    * broadcast join. This is the FULL-VERSION read path ([[manifest]]
+    * feeding [[readManifest]]'s semi-join, the maintenance aggregates,
+    * the WAP audit), where the file rows stay in the plan and never pass
+    * through the driver; planning it runs no Spark job. Bucket-scoped
+    * commit paths resolve the same rows driver-side instead ([[liveRows]]
+    * via [[filesOf]]). */
   private[ops] def resolveFromPairs(s: SparkSession, root: String,
       pairs0: Seq[(String, Option[Seq[Long]])], nb: Option[Long],
-      buckets: Option[Seq[Long]]): DataFrame = {
+      buckets: Option[Seq[Long]],
+      segSchema: StructType = ManifestIo.cowSegmentSchema): DataFrame = {
     // segment pruning: an explicit-array segment none of whose buckets is
     // wanted contributes nothing — skip its scan entirely
     val pairs = buckets.fold(pairs0) { bs =>
@@ -723,12 +680,10 @@ object VersionedTableImpl {
     def withNb(df: DataFrame) = nb.fold(df)(n =>
       df.withColumn("nbuckets", lit(n)))
     if (pairs.isEmpty)
-      return withNb(s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("bucket", LongType),
-          StructField("file", StringType), StructField("bytes", LongType)))))
+      return withNb(s.createDataFrame(s.sparkContext.emptyRDD[Row], segSchema))
     val paths = pairs.map(_._1).distinct
       .map(n => new Path(segmentsDir(root), n).toString)
-    val seg = s.read.option("mergeSchema", "true").parquet(paths: _*)
+    val seg = s.read.schema(segSchema).parquet(paths: _*)
       .withColumn("__seg",
         regexp_extract(col("_metadata.file_path"), "_segments/([^/]+?)(/|$)", 1))
     import s.implicits._
@@ -743,49 +698,28 @@ object VersionedTableImpl {
   }
 
   /** Flat (bucket, file, bytes[, nbuckets]) rows of manifest v — the
-    * resolved view every reader consumes; see the layering note above. */
+    * resolved view every reader consumes; see the layering note above.
+    * The descriptor is read on the driver and the segment scan is planned
+    * with the COW segment schema, so this plans with no Spark job. */
   private[graft] def manifest(s: SparkSession, root: String, v: Int,
-      lin: Lineage = Main): DataFrame =
-    resolveDescriptorAt(s, root, v, lin)
-
-  /** Copy version v's DESCRIPTOR to `tmp`, metadata→metadata — the
-    * restore/branch-fork/promote write. Driver-side read+write when the
-    * descriptor parses (no Spark jobs; a descriptor is O(segments)
-    * metadata); the Spark coalesce(1) copy remains the legacy-manifest
-    * fallback. An all-null nbuckets column degrades to the no-column form
-    * on copy — readers treat the two identically (nb resolves to None
-    * either way). */
-  private def copyDescriptorTo(s: SparkSession, root: String, v: Int,
-      tmp: Path, lin: Lineage = Main): Unit = {
-    val fast = manifestDataPath(fsOf(s, root), lin.visible(root, v)).flatMap(p =>
-      ManifestIo.readDescriptorRows(
-        s.sparkContext.hadoopConfiguration, fsOf(s, root), p))
-    fast match {
-      case Some((rows, nb)) =>
-        ManifestIo.writeDescriptor(
-          s.sparkContext.hadoopConfiguration, tmp, rows, nb)
-      case None =>
-        descriptorDf(s, root, v, lin).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-    }
+      lin: Lineage = Main): DataFrame = {
+    val (rows, nb) = descriptorAt(s, root, v, lin).getOrElse((Vector.empty, None))
+    resolveFromPairs(s, root, rows, nb, None)
   }
 
-  /** [[resolveDescriptor]] addressed by version: descriptor rows come from
-    * the DRIVER-SIDE parquet read when possible (metadata-sized by design;
-    * the Spark collect was a full scheduled job per resolution — see
-    * [[descriptorPairs]]), falling back to the distributed path on any
-    * hiccup, legacy manifests included. */
-  private def resolveDescriptorAt(s: SparkSession, root: String, v: Int,
-      lin: Lineage = Main): DataFrame =
-    manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
-      case None => resolveFromPairs(s, root, Seq.empty, None, None)
-      case Some(p) =>
-        ManifestIo.readDescriptorRows(
-            s.sparkContext.hadoopConfiguration, fsOf(s, root), p) match {
-          case Some((rows, nb)) => resolveFromPairs(s, root, rows, nb, None)
-          case None => resolveDescriptor(s, root, descriptorDf(s, root, v, lin))
-        }
+  /** Copy version v's DESCRIPTOR to `tmp`, metadata→metadata — the
+    * restore/branch-fork/promote write: one driver-side read and write, no
+    * Spark job. Only v = 0 may lack a manifest (main's empty table, a
+    * branch forked from it); it copies as the empty descriptor. */
+  private def copyDescriptorTo(s: SparkSession, root: String, v: Int,
+      tmp: Path, lin: Lineage = Main): Unit = {
+    val (rows, nb) = descriptorAt(s, root, v, lin).getOrElse {
+      if (v == 0) (Vector.empty, None)
+      else throw new IllegalStateException(
+        s"manifest ${lin.prefix}$v not found under $root/_versions")
     }
+    ManifestIo.writeDescriptor(s.sparkContext.hadoopConfiguration, tmp, rows, nb)
+  }
 
   /** The bucket count of version v — the manifest's own record, never the
     * caller's parameter. `orElse` bootstraps an empty table (v = 0).
@@ -798,40 +732,22 @@ object VersionedTableImpl {
     * loop needs: each optimistic attempt resolves (v, nbuckets-of-v) as a
     * pair, so a successful publish of v+1 proves the bucketing it wrote
     * with was v's (re-reading "current" inside the attempt could see a
-    * racer's newer manifest and split the pair). */
+    * racer's newer manifest and split the pair). `orElse` also answers for
+    * a descriptor that records no count: a zero-row one (an empty fork)
+    * or one written without the nbuckets column. */
   private[ops] def bucketsAt(s: SparkSession, root: String, v: Int,
       orElse: Int, lin: Lineage = Main): Int =
     // a branch's v0 fork manifest is real — probe, don't special-case
-    manifestDataPath(fsOf(s, root), lin.visible(root, v)) match {
-      case None => orElse
-      case Some(p) =>
-        // driver-side fast path ([[descriptorPairs]] note): nb None covers
-        // both the empty-column era and a zero-row manifest (empty fork)
-        ManifestIo.readDescriptorRows(
-            s.sparkContext.hadoopConfiguration, fsOf(s, root), p) match {
-          case Some((_, nb)) => nb.fold(orElse)(_.toInt)
-          case None => // legacy manifest: distributed read
-            val m = s.read.parquet(p.toString)
-            if (!m.columns.contains("nbuckets")) orElse // empty-column era
-            else m.select(col("nbuckets")).limit(1).collect().headOption
-              .fold(orElse)(_.getLong(0).toInt) // zero-row manifest: empty fork
-        }
-    }
+    descriptorAt(s, root, v, lin).flatMap(_._2).fold(orElse)(_.toInt)
 
   /** Bucket-pruned explicit file list for bucket-scoped reads
     * (O(touched buckets) paths), resolved on the DRIVER from the two
     * sources already there: the descriptor rows and the COW segment rows
     * ([[liveRows]] — write-time cached, else one driver read each). No
-    * Spark job. A legacy flat manifest (the descriptor read rejects it)
-    * keeps the distributed resolution. Full version reads go through
-    * [[readManifest]] instead. */
+    * Spark job. Full version reads go through [[readManifest]] instead. */
   private[ops] def filesOf(s: SparkSession, root: String, v: Int,
       buckets: Option[Seq[Long]], lin: Lineage = Main): Seq[String] =
-    descriptorPairs(s, root, v, lin) match {
-      case Right(pairs) => liveRows(s, root, pairs, buckets).map(_._2)
-      case Left(legacy) => resolveDescriptor(s, root, legacy, buckets)
-        .select(col("file")).collect().map(_.getString(0)).toSeq
-    }
+    liveRows(s, root, descriptorPairs(s, root, v, lin), buckets).map(_._2)
 
   /** Stage→data move shared by every COW write path ([[commitLoop]],
     * [[compactVersion]], [[rebucket]]): list the staged `bucket=` dirs,
@@ -1282,6 +1198,21 @@ object VersionedTableImpl {
         .drop("from_base"))
   }
 
+  /** The descriptor rows a COW commit carries forward: `pairs` with the
+    * `rewritten` buckets masked out of every array (a row left with no
+    * bucket is dropped). Every COW descriptor row names its buckets. */
+  private def carriedMasked(root: String, pairs: Seq[(String, Option[Seq[Long]])],
+      rewritten: Seq[Long]): Seq[(String, Option[Seq[Long]])] = {
+    val gone = rewritten.toSet
+    pairs.flatMap {
+      case (seg, Some(bs)) =>
+        val rem = bs.filterNot(gone)
+        if (rem.isEmpty) None else Some((seg, Some(rem)))
+      case (seg, None) => throw new IllegalStateException(
+        s"COW descriptor row for $seg lacks its bucket array at $root")
+    }
+  }
+
   /** The optimistic-concurrency commit loop shared by [[commitMerge]] and
     * [[mergeInto]]: read the touched buckets of the CURRENT version, apply
     * `merge` to produce the buckets' next state, stage, claim, publish;
@@ -1336,34 +1267,8 @@ object VersionedTableImpl {
       // masked out of their arrays, plus the new mapping — O(live
       // segments) driver-side metadata. The carried FILE rows are never
       // copied: per-commit manifest metadata stays O(batch).
-      import s.implicits._
       val segName = writeSegmentRows(s, root, newFiles)
-      val touchedSet = touched.toSet
-      var consolidated: Option[String] = None // cleaned up on a lost race
-      val carried: Seq[(String, Option[Seq[Long]])] =
-        descriptorPairs(s, root, v, lin) match {
-          case Right(pairs) => pairs.flatMap {
-            case (seg, Some(bs)) =>
-              val rem = bs.filterNot(touchedSet)
-              if (rem.isEmpty) None else Some((seg, Some(rem)))
-            case (seg, None) => throw new IllegalStateException(
-              s"COW descriptor row for $seg lacks its bucket array at $root")
-          }
-          case Left(legacy) => // one-time consolidation of a pre-layering
-            // manifest: its carried file rows become one explicit segment
-            val keep = legacy.filter(!col("bucket").isin(touched: _*))
-            val rows = (if (keep.columns.contains("bytes")) keep
-                        else keep.withColumn("bytes", lit(0L)))
-              .select(col("bucket"), col("file"), col("bytes"))
-            val covered = rows.select(col("bucket")).distinct()
-              .as[Long].collect().toSeq.sorted
-            if (covered.isEmpty) Nil
-            else {
-              val cs = writeSegment(s, root, rows)
-              consolidated = Some(cs)
-              Seq((cs, Some(covered)))
-            }
-        }
+      val carried = carriedMasked(root, descriptorPairs(s, root, v, lin), touched)
       val tmp = new Path(root,
         s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
       writeDescriptorFile(s, tmp,
@@ -1406,13 +1311,10 @@ object VersionedTableImpl {
         if (!beaten) Some(false) // claim lost: nothing of ours published
         else committedReferences(s, fs,
           if (pendingStage) lin.pending(root, newV) else lin.visible(root, newV),
-          segName +: consolidated.toSeq)
+          Seq(segName))
       if (raceVerdict.contains(true)) return (newV, touched) // we won, response-lost
       fs.delete(tmp, true)
-      if (raceVerdict.contains(false)) {
-        deleteSegment(fs, root, segName)
-        consolidated.foreach(deleteSegment(fs, root, _))
-      }
+      if (raceVerdict.contains(false)) deleteSegment(fs, root, segName)
       if (attempt >= maxAttempts)
         throw new IllegalStateException(
           s"$what lost $maxAttempts optimistic attempts at $root (last target ${lin.prefix}$newV)")
@@ -1524,8 +1426,9 @@ object VersionedTableImpl {
     val pending = pendingPath(root, newV)
     val pendingData = manifestDataPath(fs, pending).getOrElse(
       throw new IllegalStateException(s"staged pending $pending not found"))
-    val staged = readManifest(s, root,
-      resolveDescriptor(s, root, s.read.parquet(pendingData.toString)),
+    val (rows, nb) = ManifestIo.readDescriptorRows(
+      s.sparkContext.hadoopConfiguration, fs, pendingData)
+    val staged = readManifest(s, root, resolveFromPairs(s, root, rows, nb, None),
       LakehouseOpsImpl.tableSchema)
       .filter(!col("last_op").isin(LakehouseOpsImpl.DeleteOps: _*)) // live state
     audit(staged) match {
@@ -1949,22 +1852,29 @@ object VersionedTableImpl {
           .stripSuffix(".parquet").toIntOption.exists(_ > cur0)
       }
     }
-    // A PIN is one protected manifest, captured EAGERLY as driver-side
-    // metadata: descriptor rows (O(segments), tiny) plus inline file rows
-    // for legacy flat manifests. Capturing rows — not lazy DataFrames —
-    // is what preserves the liveness ORDERING argument below, and the
-    // capture is metadata-sized either way; the FILE rows the pins
-    // protect are resolved later as one DataFrame and never collected.
-    final case class Pin(segs: Seq[(String, Option[Seq[Long]])],
-        files: Seq[String])
-    def pinOf(p: Path): Pin = scala.util.Try { // may be mid-write (tmp):
-      // its files are younger than any sane graceMs anyway
-      val df = s.read.parquet(p.toString)
-      if (df.columns.contains("file"))
-        Pin(Nil, df.select(col("file")).collect().map(_.getString(0)).toSeq)
-      else Pin(df.select(col("segment"), col("buckets")).collect().toSeq
-        .map(r => (r.getString(0), Option(r.getSeq[Long](1)).map(_.toSeq))), Nil)
-    }.getOrElse(Pin(Nil, Nil))
+    // A PIN is one protected manifest's descriptor rows (O(segments),
+    // tiny), captured EAGERLY on the driver. Capturing rows — not lazy
+    // DataFrames — is what preserves the liveness ORDERING argument
+    // below; the FILE rows the pins protect are resolved later as one
+    // DataFrame and never collected. Which read failures a pin may
+    // tolerate depends on the artifact:
+    //  - a BRANCH manifest (`b-…`, or its conditional-mode `.data-b-…`
+    //    dir) is published whole, so only FileNotFound — the branch was
+    //    dropped mid-pass — pins nothing; any other failure fails the pass,
+    //    since pinning nothing would sweep the branch's live files;
+    //  - in-flight `.tmp-`/`.pending-`/`.data-` artifacts may be mid-write
+    //    or already cleaned up by a losing racer; their files are younger
+    //    than any sane graceMs anyway, so an unreadable one pins nothing.
+    type Pin = Seq[(String, Option[Seq[Long]])]
+    val conf = s.sparkContext.hadoopConfiguration
+    def pinOf(p: Path): Pin = {
+      val n = p.getName
+      val branch = n.startsWith("b-") || n.startsWith(".data-b-")
+      try ManifestIo.readDescriptorRows(conf, fs, p)._1
+      catch {
+        case e: Exception if !branch || isFnfChain(e) => Nil
+      }
+    }
     val inFlight: Seq[Pin] =
       if (!fs.exists(vDir)) Seq.empty
       else fs.listStatus(vDir).map(_.getPath)
@@ -1996,12 +1906,11 @@ object VersionedTableImpl {
       (listTags(s, root).map(_._2).distinct
         .filter(v => v >= 1 && v < keepFrom) // >= keepFrom already live below
         ++ (keepFrom to cur))
-        .map { v => val (segs, files) = pinOf0(s, root, v); Pin(segs, files) }
-    val pins: Seq[Pin] = inFlight ++ committedPins
+        .map(v => descriptorPairs(s, root, v))
     // merge every pin's segment masks: None (all buckets) absorbs arrays,
     // arrays union — one resolution serves the whole live set
     val masks = scala.collection.mutable.HashMap[String, Option[Set[Long]]]()
-    pins.flatMap(_.segs).foreach { case (seg, bks) =>
+    (inFlight ++ committedPins).flatten.foreach { case (seg, bks) =>
       masks.get(seg) match {
         case Some(None) => ()
         case Some(Some(prev)) =>
@@ -2023,30 +1932,25 @@ object VersionedTableImpl {
     val dataDir = new Path(root, "data")
     if (!fs.exists(dataDir)) return None
     // LIVE FILE SET as a PLAN: one union-of-segments scan masked by the
-    // merged descriptor pairs, plus the (legacy/tiny) inline rows — the
-    // file names never pass through the driver.
+    // merged descriptor pairs — the file names never pass through the
+    // driver.
+    //
+    // A pinned segment can legitimately VANISH mid-pass: pinOf captured
+    // a racing committer's tmp descriptor, the racer lost its claim and
+    // eagerly deleted its own segment (whose files are garbage this
+    // same pass's grace protects anyway). Filter at plan time and
+    // ignore files deleted between planning and execution — aborting
+    // the whole vacuum on a lost commit's cleanup would make the
+    // cadence flaky exactly when writers are busiest. Live segments
+    // are never deleted (only lost commits and the unreferenced-sweep
+    // delete segments), so leniency here cannot under-pin.
     import s.implicits._
-    val segLive: Option[DataFrame] =
-      if (masks.isEmpty) None
-      else {
-        // a pinned segment can legitimately VANISH mid-pass: pinOf captured
-        // a racing committer's tmp descriptor, the racer lost its claim and
-        // eagerly deleted its own segment (whose files are garbage this
-        // same pass's grace protects anyway). Filter at plan time and
-        // ignore files deleted between planning and execution — aborting
-        // the whole vacuum on a lost commit's cleanup would make the
-        // cadence flaky exactly when writers are busiest. Live segments
-        // are never deleted (only lost commits and the unreferenced-sweep
-        // delete segments), so leniency here cannot under-pin.
-        val paths = masks.keys.toSeq.sorted
-          .map(n => new Path(segDir, n))
-          .filter(fs.exists(_)).map(_.toString)
-        if (paths.isEmpty) None
-        else Some(readSegLive(s, segDir, paths, masks))
-      }
-    val inline = pins.flatMap(_.files).distinct
-    val liveFiles = (segLive.toSeq :+ inline.toDF("file"))
-      .reduce(_ unionByName _).distinct()
+    val paths = masks.keys.toSeq.sorted
+      .map(n => new Path(segDir, n))
+      .filter(fs.exists(_)).map(_.toString)
+    val liveFiles: DataFrame =
+      if (paths.isEmpty) Seq.empty[String].toDF("file")
+      else readSegLive(s, segDir, paths, masks).distinct()
     // DATA LISTING, distributed: O(buckets) dir names fan out to tasks
     // that list their own dirs — at million-file roots the listing is
     // cluster work, not a serial driver loop.
@@ -2086,7 +1990,9 @@ object VersionedTableImpl {
   private def readSegLive(s: SparkSession, segDir: Path, paths: Seq[String],
       masks: scala.collection.Map[String, Option[Set[Long]]]): DataFrame = {
     import s.implicits._
-    val seg = s.read.option("mergeSchema", "true")
+    // the pins need only (bucket, file), which COW and MOR segments share
+    val seg = s.read.schema(StructType(Seq(StructField("bucket", LongType),
+        StructField("file", StringType))))
       .option("ignoreMissingFiles", "true").parquet(paths: _*)
       .withColumn("__seg",
         regexp_extract(col("_metadata.file_path"), "_segments/([^/]+?)(/|$)", 1))
@@ -2098,16 +2004,6 @@ object VersionedTableImpl {
           array_contains(maskDf("__dbks"), seg("bucket"))), "inner")
       .select(col("file"))
   }
-
-  /** [[vacuum]]'s pin capture for a COMMITTED version (same Pin shape as
-    * the in-flight capture): descriptor rows, or inline files for a
-    * legacy flat manifest. */
-  private def pinOf0(s: SparkSession, root: String, v: Int) =
-    descriptorPairs(s, root, v) match { // driver-side fast path inside
-      case Left(df) =>
-        (Nil, df.select(col("file")).collect().map(_.getString(0)).toSeq)
-      case Right(rows) => (rows, Seq.empty[String])
-    }
 
   /** COMPACT the current version's over-fragmented buckets into a NEW
     * version with identical state — the versioned table's small-files
@@ -2144,19 +2040,13 @@ object VersionedTableImpl {
     val v = currentVersion(s, root)
     if (v == 0) return None
     val nb = tableBuckets(s, root, nBuckets) // stored count wins
-    import s.implicits._
     // the threshold check is driver metadata: live files per bucket from
     // the descriptor and the (write-time cached) segment rows — no job
     // when nothing is over, which is nearly every streaming epoch
-    val counts = descriptorPairs(s, root, v) match {
-      case Right(pairs) => liveRows(s, root, pairs, None)
-        .groupBy(_._1).collect { case (b, files) if files.size > maxFiles => b }
-        .toSeq.sorted
-      case Left(legacy) => resolveDescriptor(s, root, legacy)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > maxFiles)
-        .select(col("bucket")).as[Long].collect().toSeq.sorted
-    }
+    val pairs = descriptorPairs(s, root, v)
+    val counts = liveRows(s, root, pairs, None)
+      .groupBy(_._1).collect { case (b, files) if files.size > maxFiles => b }
+      .toSeq.sorted
     if (counts.isEmpty) return None
     val fs = fsOf(s, root)
     val newV = v + 1
@@ -2201,31 +2091,7 @@ object VersionedTableImpl {
     // descriptor rows masked (the commitLoop discipline — O(segments)
     // metadata, never the carried file rows)
     val segName = writeSegmentRows(s, root, newFiles)
-    val overSet = counts.toSet
-    var consolidated: Option[String] = None // cleaned up on a lost claim
-    val carried: Seq[(String, Option[Seq[Long]])] =
-      descriptorPairs(s, root, v) match {
-        case Right(pairs) => pairs.flatMap {
-          case (seg, Some(bs)) =>
-            val rem = bs.filterNot(overSet)
-            if (rem.isEmpty) None else Some((seg, Some(rem)))
-          case (seg, None) => throw new IllegalStateException(
-            s"COW descriptor row for $seg lacks its bucket array at $root")
-        }
-        case Left(legacy) =>
-          val keep = legacy.filter(!col("bucket").isin(counts: _*))
-          val rows = (if (keep.columns.contains("bytes")) keep
-                      else keep.withColumn("bytes", lit(0L)))
-            .select(col("bucket"), col("file"), col("bytes"))
-          val covered = rows.select(col("bucket")).distinct()
-            .as[Long].collect().toSeq.sorted
-          if (covered.isEmpty) Nil
-          else {
-            val cs = writeSegment(s, root, rows)
-            consolidated = Some(cs)
-            Seq((cs, Some(covered)))
-          }
-      }
+    val carried = carriedMasked(root, pairs, counts)
     val tmp = new Path(root,
       s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
     writeDescriptorFile(s, tmp,
@@ -2234,7 +2100,6 @@ object VersionedTableImpl {
     val cid = claimVersionId(s, root, newV, staleClaimMs).getOrElse {
       fs.delete(tmp, true) // moved rewrite files strand until vacuum
       deleteSegment(fs, root, segName)
-      consolidated.foreach(deleteSegment(fs, root, _))
       return None
     }
     try publish(fs, tmp, visiblePath(root, newV), "compaction")
@@ -2244,12 +2109,10 @@ object VersionedTableImpl {
         // whose read-backs failed): deleting the staged segments would
         // gut it. Content-checked; unknown strands (vacuum reclaims).
         if manifestCommitted(fs, visiblePath(root, newV)) =>
-        committedReferences(s, fs, visiblePath(root, newV),
-            segName +: consolidated.toSeq) match {
+        committedReferences(s, fs, visiblePath(root, newV), Seq(segName)) match {
           case Some(true) => return Some(newV)
           case Some(false) =>
-            fs.delete(tmp, true); deleteSegment(fs, root, segName)
-            consolidated.foreach(deleteSegment(fs, root, _)); return None
+            fs.delete(tmp, true); deleteSegment(fs, root, segName); return None
           case None => fs.delete(tmp, true); return None
         }
       case e: Throwable => // failed without committing: unblock the version
@@ -2280,9 +2143,9 @@ object VersionedTableImpl {
     val newV = v + 1
     // read the version's FULL file set from the manifest itself (the
     // semi-join read — bucketing-agnostic), never a 0-until-count bucket
-    // range: a pre-nbuckets-era manifest has no recorded count, and
-    // assuming the CALLER's newBuckets as the range would read only
-    // buckets 0..newBuckets-1 when shrinking a legacy table — silently
+    // range: a descriptor written without the nbuckets column records no
+    // count, and assuming the CALLER's newBuckets as the range would read
+    // only buckets 0..newBuckets-1 when shrinking such a table — silently
     // dropping every row in the buckets above (round-10 advisory).
     // Tombstones ride along (raw read): the rewrite must carry them.
     val raw = readManifest(s, root, manifest(s, root, v),
@@ -2351,8 +2214,8 @@ object VersionedTableImpl {
     // size from the manifest's own `bytes` column — ONE metadata
     // aggregate, zero per-file getFileStatus calls (the round-11 weak #2:
     // a serial HEAD per live file is hours at a million files on an
-    // object store). Legacy rows carry bytes = 0 and simply read as a
-    // healthy layout (no auto-growth until their buckets are rewritten).
+    // object store). Every segment row records its file's length at
+    // write time.
     val totalBytes = manifest(s, root, v)
       .agg(coalesce(sum(col("bytes")), lit(0L))).head.getLong(0)
     val nb = tableBuckets(s, root, 1)

@@ -60,16 +60,14 @@ class Advisory10Spec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("adv10_legacy").toString
     VersionedTableImpl.commitMerge(spark, root,
       env((0L until 32L).map(u => (8L * u, u))), nBuckets = 4)
-    // age the manifest back to the pre-nbuckets, pre-layering era: the
-    // FLAT file-rows form with the nbuckets column gone (resolve first —
-    // the committed artifact is a layered descriptor now)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // age the descriptor back to the pre-nbuckets era: the same rows with
+    // the nbuckets column gone, so the version records no bucket count
+    val conf = spark.sparkContext.hadoopConfiguration
     val vis = new org.apache.hadoop.fs.Path(root, "_versions/v1.parquet")
-    val legacy = VersionedTableImpl.manifest(spark, root, 1)
-      .drop("nbuckets", "bytes")
+    val fs = vis.getFileSystem(conf)
+    val (rows, _) = ManifestIo.readDescriptorRows(conf, fs, vis)
     val tmp = new org.apache.hadoop.fs.Path(root, "_versions/.legacy.parquet")
-    legacy.coalesce(1).write.parquet(tmp.toString)
+    ManifestIo.writeDescriptor(conf, tmp, rows, None)
     fs.delete(vis, true)
     assert(fs.rename(tmp, vis))
     assert(!spark.read.parquet(vis.toString).columns.contains("nbuckets"))

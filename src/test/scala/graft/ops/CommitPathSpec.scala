@@ -96,6 +96,26 @@ class CommitPathSpec extends SparkSpec {
       .select(col("user_id"), col("last_seq")).as[(Long, String)].collect().toSet == before)
   }
 
+  test("planning a full-version manifest runs no Spark job, cold metadata cache included") {
+    val v = VersionedTableImpl.currentVersion(spark, root)
+    ManifestIo.MetaCache.clear()
+    val (m, jobs) = jobsOf(VersionedTableImpl.manifest(spark, root, v))
+    assert(jobs == 0, s"planning manifest(v$v) ran $jobs Spark jobs")
+    assert(m.select(col("file")).as[String].collect().toSet ==
+      VersionedTableImpl.filesOf(spark, root, v, None).toSet,
+      "the planned manifest lists the version's live files")
+  }
+
+  test("a MOR compaction check with nothing over threshold runs no Spark job") {
+    val mor = Files.createTempDirectory("graft_mor_jobs").toString
+    (0 until 3).foreach(i => MorTableImpl.commitAppend(spark, mor,
+      batch(i * 150, i * 150 + 200), NB, autoCompact = false))
+    ManifestIo.MetaCache.clear()
+    val (none, jobs) = jobsOf(MorTableImpl.compactMor(spark, mor, 100, NB))
+    assert(none.isEmpty, "nothing is over the threshold")
+    assert(jobs == 0, s"a no-op MOR compaction check ran $jobs Spark jobs")
+  }
+
   test("a rebucket that wins the sink's first-targeted version: _feed/v{N} equals changeFeed(N-1, N)") {
     spark.sparkContext.hadoopConfiguration.set("fs.hookfs.impl",
       classOf[graft.fs.HookFileSystem].getName)

@@ -11,10 +11,11 @@ import graft.SparkSpec
   * (round 16); every commit/read path in Versioned/Mor now rests on the
   * driver-side read returning EXACTLY what the distributed read returned —
   * including the null-vs-empty buckets distinction (null = "all buckets"
-  * mask, empty = "no buckets"), the first-row nbuckets constant, and a
-  * None fallback for anything it cannot parse (legacy flat manifests).
-  * Both writer eras are pinned: ManifestIo's own writer AND Spark's
-  * parquet writer (the restore/branch copy path through round 15).
+  * mask, empty = "no buckets") and the first-row nbuckets constant. Both
+  * writers are pinned: ManifestIo's own AND Spark's parquet writer. It is
+  * the only descriptor reader and has no fallback, so its failures are
+  * loud and typed: a file that is not a descriptor raises
+  * [[CorruptManifest]], and I/O errors propagate unwrapped.
   *
   * The bucket-scoped commit paths go further and resolve COW segment rows
   * and read schemas driver-side too; those are pinned against the
@@ -40,9 +41,7 @@ class DescriptorDriverReadSpec extends SparkSpec {
     Seq(Some(8L), None).foreach { nb =>
       val p = tmpDir("rt")
       ManifestIo.writeDescriptor(conf, p, rows, nb)
-      val got = ManifestIo.readDescriptorRows(conf, fs(p), p)
-      assert(got.isDefined, s"driver read failed for nb=$nb")
-      val (r, n) = got.get
+      val (r, n) = ManifestIo.readDescriptorRows(conf, fs(p), p)
       assert(r == rows.toVector, s"rows differ for nb=$nb")
       assert(n == nb)
     }
@@ -57,7 +56,7 @@ class DescriptorDriverReadSpec extends SparkSpec {
       .map(r => (r.getString(0), Option(r.getSeq[Long](1)).map(_.toSeq),
         if (r.isNullAt(2)) None else Some(r.getLong(2))))
       .toVector
-    val (r, nb) = ManifestIo.readDescriptorRows(conf, fs(p), p).get
+    val (r, nb) = ManifestIo.readDescriptorRows(conf, fs(p), p)
     assert(r == viaSpark.map { case (s, b, _) => (s, b) })
     assert(Some(nb) == viaSpark.headOption.map(_._3))
   }
@@ -68,18 +67,18 @@ class DescriptorDriverReadSpec extends SparkSpec {
     val copy = tmpDir("cp")
     spark.read.parquet(src.toString).coalesce(1)
       .write.mode("overwrite").parquet(copy.toString)
-    val got = ManifestIo.readDescriptorRows(conf, fs(copy), copy)
-    assert(got.isDefined, "driver read of a Spark-written descriptor failed")
-    assert(got.get._1 == rows.toVector)
-    assert(got.get._2 == Some(8L))
+    val (r, nb) = ManifestIo.readDescriptorRows(conf, fs(copy), copy)
+    assert(r == rows.toVector)
+    assert(nb == Some(8L))
   }
 
-  test("legacy flat manifest (file rows, no segment column) returns None") {
-    val p = tmpDir("legacy")
+  test("a non-descriptor file raises CorruptManifest naming its path") {
+    val p = tmpDir("flat")
     Seq((0L, "f0.parquet", 10L), (1L, "f1.parquet", 20L))
       .toDF("bucket", "file", "bytes")
       .coalesce(1).write.mode("overwrite").parquet(p.toString)
-    assert(ManifestIo.readDescriptorRows(conf, fs(p), p).isEmpty)
+    val e = intercept[CorruptManifest](ManifestIo.readDescriptorRows(conf, fs(p), p))
+    assert(e.path == p && e.getMessage.contains(p.toString), e.getMessage)
   }
 
   test("driver-side COW segment resolution equals the distributed read: both segment forms, every mask") {
@@ -132,8 +131,23 @@ class DescriptorDriverReadSpec extends SparkSpec {
     assert(rows(explicit) == rows(inferred))
   }
 
-  test("missing path returns None (callers fall back loudly downstream)") {
+  test("a missing descriptor propagates FileNotFoundException") {
     val p = new Path("/definitely/not/there.parquet")
-    assert(ManifestIo.readDescriptorRows(conf, fs(p), p).isEmpty)
+    intercept[java.io.FileNotFoundException](
+      ManifestIo.readDescriptorRows(conf, fs(p), p))
+  }
+
+  test("an injected read fault on the descriptor open propagates, still marked injected") {
+    conf.set("fs.flaky.impl", classOf[graft.fs.FlakyFileSystem].getName)
+    val p = tmpDir("flaky")
+    ManifestIo.writeDescriptor(conf, p, rows, Some(4L))
+    val fp = new Path(s"flaky:$p")
+    graft.fs.FlakyFileSystem.arm(1L, rate = 0.0, readRate = 1.0)
+    val e = try intercept[Exception](
+        ManifestIo.readDescriptorRows(conf, fs(fp), fp))
+      finally graft.fs.FlakyFileSystem.disarm()
+    assert(graft.fs.FlakyFileSystem.isInjected(e), e.toString)
+    assert(ManifestIo.readDescriptorRows(conf, fs(fp), fp)._1 == rows.toVector,
+      "the same read succeeds once the fault is gone")
   }
 }

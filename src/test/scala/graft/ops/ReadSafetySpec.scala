@@ -176,6 +176,35 @@ class ReadSafetySpec extends SparkSpec {
     } finally graft.fs.ScriptedFaultFileSystem.reset()
   }
 
+  test("vacuum fails loudly on an unreadable branch manifest instead of sweeping the branch") {
+    graft.fs.ScriptedFaultFileSystem.reset()
+    val local = java.nio.file.Files.createTempDirectory("vac_branch_fault").toString
+    val root = s"scripted:$local"
+    try {
+      VersionedTableImpl.commitMerge(spark, root,
+        env((1L to 8L).map(i => (8L * i, i))), NB)
+      VersionedTableImpl.createBranch(spark, root, "audit")
+      VersionedTableImpl.commitMergeToBranch(spark, root, "audit",
+        env((9L to 16L).map(i => (8L * i, i))), NB)
+      def branchRows() = VersionedTableImpl.readBranch(spark, root, "audit")
+        .select(col("user_id"), col("last_seq")).as[(Long, String)]
+        .collect().toSeq.sorted
+      val before = branchRows()
+      assert(before.size == 16)
+      // the branch head is complete on disk (a branch manifest is published
+      // by rename) but its open fails: pinning nothing for it would let
+      // this grace-0 pass sweep the branch's own segment and data files
+      graft.fs.ScriptedFaultFileSystem.script(
+        graft.fs.ScriptedFaultFileSystem.failOpens, "b-audit-v1.parquet/", 100)
+      val cur = VersionedTableImpl.currentVersion(spark, root)
+      val e = intercept[java.io.IOException](
+        VersionedTableImpl.vacuum(spark, root, keepFrom = cur, graceMs = 0L))
+      assert(e.getMessage.contains("scripted"), e.getMessage)
+      graft.fs.ScriptedFaultFileSystem.reset()
+      assert(branchRows() == before, "the branch head reads unchanged")
+    } finally graft.fs.ScriptedFaultFileSystem.reset()
+  }
+
   test("pointer positively absent after retries: staged copy is deleted, the abort says so") {
     graft.fs.ScriptedFaultFileSystem.reset()
     val local = java.nio.file.Files.createTempDirectory("ptr_pos_absent").toString
