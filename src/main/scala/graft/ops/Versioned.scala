@@ -806,6 +806,13 @@ object VersionedTableImpl {
     //    the listing is invisibly absent today, so the loud path never
     //    covered erroneous deletion; spurious reader aborts under a
     //    routine vacuum cadence are the real operational cost.
+    //  - MID-FILE: a file deleted AFTER its scan task opened it. Parquet's
+    //    vectored row-group read reopens the file by path (the local FS
+    //    opens a fresh async channel), so the deletion surfaces as a
+    //    java.nio NoSuchFileException — not a FileNotFoundException, so
+    //    ignoreMissingFiles does not cover it. With vectored reads off
+    //    for this scan, footer and row groups come through the one
+    //    stream the task opened, which still reads an unlinked file.
     //
     // STRICT MODE (`spark.graft.read.strictMissingFiles=true`, session
     // conf): for readers that prefer fail-loud over availability —
@@ -846,6 +853,7 @@ object VersionedTableImpl {
       attempt += 1
       try scan = s.read.option("mergeSchema", "true")
         .option("ignoreMissingFiles", (!strict).toString)
+        .option("parquet.hadoop.vectored.io.enabled", "false")
         .parquet(dataDir.toString)
       catch {
         case e: Throwable if isFnf(e) =>

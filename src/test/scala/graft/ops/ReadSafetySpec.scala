@@ -319,6 +319,39 @@ class ReadSafetySpec extends SparkSpec {
     assert(VersionedTableImpl.readVersion(spark, root, cur).count() == expect)
   }
 
+  test("a dead file deleted after a scan task opened it never fails the reader") {
+    spark.sparkContext.hadoopConfiguration.set("fs.hookfs.impl",
+      classOf[graft.fs.HookFileSystem].getName)
+    val local = java.nio.file.Files.createTempDirectory("vac_mid_file").toString
+    val root = s"hookfs://$local"
+    (1L to 3L).foreach { i =>
+      VersionedTableImpl.commitMerge(spark, root,
+        env(Seq((8L * i, i % 2), (8L * i + 1, 2L + i % 2))), NB)
+    }
+    val cur = VersionedTableImpl.currentVersion(spark, root)
+    val expect = VersionedTableImpl.readVersion(spark, root, cur).count()
+    def key(p: String) = p.split('/').takeRight(2).mkString("/")
+    val live = VersionedTableImpl.manifest(spark, root, cur)
+      .select(col("file")).as[String].collect().map(key).toSet
+    val dead = java.nio.file.Files.walk(java.nio.file.Paths.get(local, "data"))
+      .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      .filterNot(f => live(key(f))).toSet
+    assert(dead.nonEmpty, "fixture: the merges left superseded files")
+    // a vacuum deleting a dead file while a scan task holds it open: the
+    // footer is already read, the row groups are not
+    val deleted = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.fs.HookFileSystem.onOpen = p => {
+      val f = p.toUri.getPath
+      if (dead(f) && Thread.currentThread.getStackTrace
+          .exists(_.getClassName.contains("FileScanRDD")) &&
+          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
+        deleted.incrementAndGet()
+    }
+    try assert(VersionedTableImpl.readVersion(spark, root, cur).count() == expect)
+    finally graft.fs.HookFileSystem.onOpen = _ => ()
+    assert(deleted.get() > 0, "fixture: a dead file vanished mid-scan")
+  }
+
   test("sweepStranded reclaims .data- dirs only on positive pointer evidence") {
     graft.fs.ScriptedFaultFileSystem.reset()
     val local = java.nio.file.Files.createTempDirectory("sweep_datadirs").toString
