@@ -308,17 +308,12 @@ object MorTableImpl {
     }
   }
 
-  /** Latest-per-key fold of raw (base+delta) rows, tombstones KEPT.
-    * `by` names columns that are functions of the key (the bucket): they
-    * join the grouping, so input already hash-partitioned on them needs
-    * no second exchange; they come last in the output. */
-  private def foldLatest(raw: DataFrame, by: Seq[String] = Nil): DataFrame = {
-    val keys = by :+ "user_id"
-    val others = raw.columns.filterNot(keys.contains).toSeq
-    raw.groupBy(keys.map(col): _*)
+  /** Latest-per-key fold of raw (base+delta) rows, tombstones KEPT. */
+  private def foldLatest(raw: DataFrame): DataFrame = {
+    val others = raw.columns.filterNot(_ == "user_id").toSeq
+    raw.groupBy(col("user_id"))
       .agg(max_by(struct(others.map(col): _*), col("last_seq")).as("w"))
-      .select((col("user_id") +: others.map(c => col(s"w.$c").as(c))) ++
-        by.map(col): _*)
+      .select(col("user_id") +: others.map(c => col(s"w.$c").as(c)): _*)
   }
 
   /** The table as of version v: read-side merge, then tombstone filter. */
@@ -537,11 +532,9 @@ object MorTableImpl {
       // the union of the files' footer schemas, read driver-side
       val raw = s.read.schema(VersionedTableImpl.readSchemaOf(s, files))
         .parquet(files: _*)
-      // one exchange: partitioned by bucket, the fold groups by
-      // (bucket, user_id) in place — tombstones carried
-      val staged = foldLatest(raw
-          .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
-          .repartition(over.size, col("bucket")), by = Seq("bucket"))
+      val staged = foldLatest(raw) // tombstones carried
+        .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
+        .repartition(over.size, col("bucket"))
         // key-sorted within each bucket: the compacted file's row-group
         // min/max stats then partition the key space, so post-compaction
         // point/range reads prune at the parquet footer under the zone map

@@ -1998,9 +1998,9 @@ object VersionedTableImpl {
   private def readSegLive(s: SparkSession, segDir: Path, paths: Seq[String],
       masks: scala.collection.Map[String, Option[Set[Long]]]): DataFrame = {
     import s.implicits._
-    // the pins need only (bucket, file), which COW and MOR segments share
-    val seg = s.read.schema(StructType(Seq(StructField("bucket", LongType),
-        StructField("file", StringType))))
+    // the pins need only (bucket, file): the leading columns that COW and
+    // MOR segments share
+    val seg = s.read.schema(StructType(ManifestIo.cowSegmentSchema.take(2)))
       .option("ignoreMissingFiles", "true").parquet(paths: _*)
       .withColumn("__seg",
         regexp_extract(col("_metadata.file_path"), "_segments/([^/]+?)(/|$)", 1))
