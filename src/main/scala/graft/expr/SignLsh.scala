@@ -15,24 +15,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * result (and therefore every signature bit) matches the DuckDB oracle
   * bit-for-bit — while staying a single static call inside
   * WholeStageCodegen. The unrolled form can exceed the JVM 64 KB method
-  * limit and drop to interpreted eval; this one cannot.
+  * limit and drop to interpreted eval; this one cannot. A vector shorter
+  * than the hyperplanes, or a null element, throws ([[JlProject]]).
   */
 object SignLshOp {
-  /** hyperplanes(j)(i) ∈ {-1, +1}; bit j set iff Σ_i h_ji · x_i > 0. */
+  /** hyperplanes(j)(i) ∈ {-1, +1}; bit j set iff Σ_i h_ji · x_i > 0 — the
+    * sign of [[JlProject.project]]'s chain (`> 0.0` is false for both
+    * zeros, so seeding from the first term leaves every bit as it was). */
   def compute(vec: ArrayData, planes: Array[Array[Int]]): Long = {
-    val n = vec.numElements()
     var sig = 0L
     var j = 0
     while (j < planes.length) {
-      val row = planes(j)
-      var acc = 0.0
-      var i = 0
-      val m = math.min(n, row.length)
-      while (i < m) {
-        acc += row(i) * vec.getFloat(i).toDouble
-        i += 1
-      }
-      if (acc > 0.0) sig |= (1L << j)
+      if (JlProject.project(vec, planes(j), vecFloat = true) > 0.0) sig |= (1L << j)
       j += 1
     }
     sig

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
+import graft.expr.NearestF64
 
 /** Similarity-search operators over the `embeddings` table
   * (`embedding: array<float>[64]`).
@@ -23,11 +24,12 @@ import graft.{Q, Tables}
   *  - LSH: 16 sign-random-projection bits → bucket equi-join, the shuffle is
   *    O(n) on bucket keys instead of O(n²) pairs.
   *
-  * Cross-engine determinism: all dot products / distances are UNROLLED
-  * left-associative double expressions — Spark and DuckDB evaluate the same
-  * IEEE operation sequence, so results match bitwise with no rounding fudge.
-  * The LSH hyperplanes are ±1 constants derived from md5 at codegen time and
-  * baked into both engines' SQL as literals.
+  * Cross-engine determinism: all dot products / distances are
+  * left-associative double sums — unrolled text in the DuckDB oracles,
+  * native graft.expr kernels that run the same IEEE operation sequence on
+  * the Spark side — so results match bitwise with no rounding fudge. The
+  * LSH/JL hyperplanes are ±1 constants derived from md5 at plan time, baked
+  * into the oracle SQL as literals and handed to the kernels as values.
   */
 object VectorOpsImpl {
 
@@ -282,14 +284,6 @@ object VectorOpsImpl {
     * (graft.streaming.StreamIndex). Appends `assigned` to whatever columns
     * `e` carries. Stateless and narrow, so it applies to batch and
     * streaming frames alike. */
-  /** The codebook as a SQL array-of-structs literal (ConstantFolding turns
-    * it into one reference object, so generated code stays IDENTICAL across
-    * Lloyd iterations — see graft.expr.NearestF64's scaladoc). */
-  private[graft] def centersSql(cents: Seq[(Long, Array[Double])]): String =
-    cents.map { case (cl, cv) =>
-      s"named_struct('l', ${cl}L, 'v', array(${cv.map(v => s"${v}D").mkString(",")}))"
-    }.mkString("array(", ",", ")")
-
   private[graft] def assignCenters(e: DataFrame,
       cents: Seq[(Long, Array[Double])]): DataFrame = {
     // native argmin (graft.expr.NearestF64Expr): ONE static call in
@@ -302,9 +296,7 @@ object VectorOpsImpl {
     // same left-associative per-center sum, same (d², label) tie-break
     // (NearestF64's scaladoc carries the parity argument; NearestF64Spec
     // proves it row-for-row against the unrolled form).
-    graft.expr.NearestF64.register(e.sparkSession)
-    e.select(col("*"),
-      expr(s"nearestf64(embedding, ${centersSql(cents)}).l").as("assigned"))
+    e.select(col("*"), NearestF64.nearest(col("embedding"), cents).getField("l").as("assigned"))
   }
 
   /** [[assignCenters]] for plans that have NO scan boundary to split the
@@ -458,7 +450,6 @@ object VectorOpsImpl {
   private def pqKmeansCodebooks(s: SparkSession,
       dir: String): IndexedSeq[Seq[(Long, Array[Double])]] =
     pqKmeansCache.computeIfAbsent(dir, { d =>
-      graft.expr.NearestF64.register(s)
       var books: IndexedSeq[Seq[(Long, Array[Double])]] =
         (0 until PqM).map { m =>
           kmeansSeeds(s, d).map { case (cid, cv) =>
@@ -471,7 +462,7 @@ object VectorOpsImpl {
         // generated source identical across iterations (see assignCenters)
         val assigned = e.select(col("embedding") +:
           (0 until PqM).map { m =>
-            expr(s"nearestf64(embedding, ${centersSql(books(m))}, ${m * PqSub}).l")
+            NearestF64.nearest(col("embedding"), books(m), m * PqSub).getField("l")
               .as(s"a$m")
           }: _*).cache()
         try {
@@ -504,9 +495,8 @@ object VectorOpsImpl {
     * codebook bakes into one codegen'd projection, no join, no shuffle. */
   private def pqKmeansCodes(s: SparkSession, dir: String): DataFrame = {
     val books = pqKmeansCodebooks(s, dir)
-    graft.expr.NearestF64.register(s)
     val codeCols = (0 until PqM).map { m =>
-      expr(s"nearestf64(embedding, ${centersSql(books(m))}, ${m * PqSub}).l")
+      NearestF64.nearest(col("embedding"), books(m), m * PqSub).getField("l")
         .as(s"code$m")
     }
     Tables(s, dir, "embeddings").select(col("vec_id") +: codeCols: _*)
@@ -519,21 +509,6 @@ object VectorOpsImpl {
     * [[pqIndexCache]]. */
   private val pqKmeansIndexCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** ADC over the learned per-subspace codebooks: Σ_m ‖q_sub −
-    * books(m)[code_m]‖², same codegen-safe `array_position`/`element_at`
-    * lookup as [[adcDistance]]. */
-  private def adcDistanceLearned(books: IndexedSeq[Seq[(Long, Array[Double])]]): Column =
-    (0 until PqM).map { m =>
-      val labels = array(books(m).map(c => lit(c._1)): _*)
-      val pos = array_position(labels, col(s"code$m")).cast(IntegerType)
-      (1 to PqSub).map { j =>
-        val i = m * PqSub + j
-        val cb = array(books(m).map(c => lit(c._2(j - 1))): _*)
-        val d = embCol("qe")(i) - element_at(cb, pos)
-        d * d
-      }.reduce(_ + _)
-    }.reduce(_ + _)
 
   /** FULLY-LEARNED IVF-PQ search (q79): the q68 pipeline with every
     * constant unsupervised — learned coarse assignment prunes to the
@@ -560,7 +535,7 @@ object VectorOpsImpl {
       .join(codes.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     val joined = broadcast(q).join(c,
         col("qcluster") === col("ncluster") && col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", adcDistanceLearned(books))
+      .withColumn("adc", adcDistance("qe", books))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     joined.withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
@@ -577,9 +552,9 @@ object VectorOpsImpl {
     * concentrate near 0, so the same 8-byte budget spends its codewords on
     * a much smaller ball than raw-vector PQ (q79) and recall rises for
     * free at identical index bytes. One narrow pass over the cached
-    * assignment view: the per-dim center lookup is an element_at into
-    * baked k-double array literals (the adcDistance discipline), so the
-    * residual computation codegens and never joins. */
+    * assignment view: the center lookup and the subtraction are one native
+    * call (graft.expr.ResidualF64Expr) with the codebook as one literal
+    * value, so the residual computation codegens and never joins. */
   private val residualCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
@@ -590,13 +565,9 @@ object VectorOpsImpl {
         assignCenters(
           Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
           cents).cache())
-      val labels = array(cents.map(c => lit(c._1)): _*)
-      val pos = array_position(labels, col("assigned")).cast(IntegerType)
-      val resCols = (1 to Dims).map { i =>
-        val cb = array(cents.map(c => lit(c._2(i - 1))): _*)
-        expr(s"CAST(element_at(embedding, $i) AS DOUBLE)") - element_at(cb, pos)
-      }
-      asg.select(col("vec_id"), col("assigned"), array(resCols: _*).as("res")).cache()
+      asg.select(col("vec_id"), col("assigned"),
+        NearestF64.residual(col("embedding"), col("assigned"), cents).as("res"))
+        .cache()
     })
 
   /** Per-subspace PQ codebooks trained on RESIDUALS — [[pqKmeansCodebooks]]
@@ -615,7 +586,6 @@ object VectorOpsImpl {
       dir: String): IndexedSeq[Seq[(Long, Array[Double])]] =
     residualPqCache.computeIfAbsent(dir, { d =>
       val r = residuals(s, d)
-      graft.expr.NearestF64.register(s)
       var books: IndexedSeq[Seq[(Long, Array[Double])]] = {
         val seedRows = r
           .withColumn("sk", md5(concat(lit("seed:"), col("vec_id").cast(StringType))))
@@ -632,7 +602,7 @@ object VectorOpsImpl {
       (1 to KmeansIters).foreach { _ =>
         val assigned = r.select(col("res") +:
           (0 until PqM).map { m =>
-            expr(s"nearestf64(res, ${centersSql(books(m))}, ${m * PqSub}).l")
+            NearestF64.nearest(col("res"), books(m), m * PqSub).getField("l")
               .as(s"a$m")
           }: _*).cache()
         try {
@@ -664,9 +634,8 @@ object VectorOpsImpl {
     * the complete IVF-PQ index entry: coarse cell + 8-byte residual code. */
   private def residualPqCodes(s: SparkSession, dir: String): DataFrame = {
     val books = residualPqCodebooks(s, dir)
-    graft.expr.NearestF64.register(s)
     val codeCols = (0 until PqM).map { m =>
-      expr(s"nearestf64(res, ${centersSql(books(m))}, ${m * PqSub}).l")
+      NearestF64.nearest(col("res"), books(m), m * PqSub).getField("l")
         .as(s"code$m")
     }
     residuals(s, dir).select(col("vec_id") :: col("assigned") :: codeCols.toList: _*)
@@ -677,22 +646,6 @@ object VectorOpsImpl {
 
   def residualPqEncode(s: SparkSession, dir: String): DataFrame =
     residualPqCodes(s, dir).orderBy(col("vec_id"))
-
-  /** ADC over residual codebooks: Σ_m ‖qres_sub − books(m)[code_m]‖² where
-    * qres is the QUERY's residual in its own coarse cell (probe = query's
-    * cell, so both sides' residuals are against the same center and the
-    * distance approximates ‖q − x‖² exactly as in the canonical scheme). */
-  private def adcDistanceResidual(books: IndexedSeq[Seq[(Long, Array[Double])]]): Column =
-    (0 until PqM).map { m =>
-      val labels = array(books(m).map(c => lit(c._1)): _*)
-      val pos = array_position(labels, col(s"code$m")).cast(IntegerType)
-      (1 to PqSub).map { j =>
-        val i = m * PqSub + j
-        val cb = array(books(m).map(c => lit(c._2(j - 1))): _*)
-        val d = element_at(col("qres"), i) - element_at(cb, pos)
-        d * d
-      }.reduce(_ + _)
-    }.reduce(_ + _)
 
   /** Residual IVF-PQ search (q149): the q79 pipeline with residual-trained
     * codes — the exact layout of production billion-scale indexes (IVFADC).
@@ -714,7 +667,10 @@ object VectorOpsImpl {
       (0 until PqM).map(m => col(s"code$m")): _*)
     val joined = broadcast(q).join(c,
         col("qcluster") === col("ncluster") && col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", adcDistanceResidual(books))
+      // ADC of the QUERY's residual in its own coarse cell (probe = query's
+      // cell, so both sides' residuals are against the same center and the
+      // distance approximates ‖q − x‖² exactly as in the canonical scheme)
+      .withColumn("adc", adcDistance("qres", books))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     joined.withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
@@ -876,65 +832,33 @@ object VectorOpsImpl {
     * scan). The corpus keeps its single-cluster assignment (that IS the
     * partition layout at scale); only the broadcast query side fans out to
     * nprobe rows, so the probe join stays a broadcast hash probe of the
-    * same materialized index q55 uses. Probe ranking = `array_sort` over
-    * (dist², label) structs — same tie discipline as the argmin. */
+    * same materialized index q55 uses. Probe ranking = the (dist², label)
+    * order of `array_sort` over (d, l) structs, computed natively — same
+    * tie discipline as the argmin. */
   def ivfMultiProbeTopK(s: SparkSession, dir: String): DataFrame =
     memoPath(s, dir, "ivf_multiprobe")(ivfMultiProbeTopKPlan(s, dir))
 
-  private[graft] def ivfMultiProbeTopKPlan(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroidVectors(s, dir)
-    def dist2(cv: Array[Double], elem: Int => Column): Column =
-      (1 to Dims).map { i =>
-        val d = elem(i) - lit(cv(i - 1))
-        d * d
-      }.reduce(_ + _)
-    val asg = graft.ops.Memo.getOrCache(assignCache, s, dir, _ => assignAll(s, dir).cache())
-    val probeRank = array_sort(array(cents.map { case (cl, cv) =>
-      struct(dist2(cv, embCol("qe")).as("d"), lit(cl).as("l"))
-    }: _*))
-    val q = asg.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .withColumn("qc1", element_at(probeRank, 1).getField("l"))
-      .withColumn("qc2", element_at(probeRank, 2).getField("l"))
-    val c = asg.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-      col("assigned").as("ncluster"))
-    val joined = broadcast(q).join(c,
-        (col("ncluster") === col("qc1") || col("ncluster") === col("qc2"))
-          && col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine",
-        expr(s"(${sparkDot("qe", "ce")}) / (sqrt(${sparkDot("qe", "qe")}) * sqrt(${sparkDot("ce", "ce")}))"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    joined.withColumn("rn", row_number().over(w).cast(LongType))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+  private[graft] def ivfMultiProbeTopKPlan(s: SparkSession, dir: String): DataFrame =
+    ivfProbeTopKN(s, dir, 2).orderBy(col("query_id"), col("rn"))
 
   /** nprobe values the q158 sweep executes. */
   val NprobeSweep: Seq[Int] = Seq(1, 2, 4)
 
-  /** [[ivfMultiProbeTopKPlan]] generalized to an arbitrary probe count. */
+  /** [[ivfMultiProbeTopKPlan]] at an arbitrary probe count. The query's
+    * probe list is one native call (graft.expr.NearestNF64Expr): the n
+    * nearest center labels by (d², label), bitwise the order the unrolled
+    * `array_sort(array(struct(d, l), …))` over k × 64 literal terms gave
+    * (NearestNF64Spec). The query side is 8 rows with a small plan, so it
+    * needs no checkpoint to keep CollapseProject from re-inlining it. */
   private def ivfProbeTopKN(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    val cents = centroidVectors(s, dir)
-    def dist2(cv: Array[Double], elem: Int => Column): Column =
-      (1 to Dims).map { i =>
-        val d = elem(i) - lit(cv(i - 1))
-        d * d
-      }.reduce(_ + _)
     val asg = graft.ops.Memo.getOrCache(assignCache, s, dir, _ => assignAll(s, dir).cache())
-    val probeRank = array_sort(array(cents.map { case (cl, cv) =>
-      struct(dist2(cv, embCol("qe")).as("d"), lit(cl).as("l"))
-    }: _*))
-    // the query side is 8 rows behind a k×64-literal array_sort that the
-    // join references nprobe times — CollapseProject re-inlines any alias,
-    // so the tree grows ×nprobe at analysis. localCheckpoint the tiny
-    // frame (the memoPath discipline): consumers see a LogicalRDD leaf.
+    val probes = NearestF64.nearestLabels(col("qe"), centroidVectors(s, dir), nprobe)
     val q = (1 to nprobe).foldLeft(
         asg.filter(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-          .withColumn("pr", probeRank)) {
-      case (df, p) => df.withColumn(s"qc$p", element_at(col("pr"), p).getField("l"))
-    }.drop("pr").localCheckpoint()
+          .withColumn("pr", probes)) {
+      case (df, p) => df.withColumn(s"qc$p", element_at(col("pr"), p))
+    }.drop("pr")
     val c = asg.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
       col("assigned").as("ncluster"))
     val probeCond = (1 to nprobe).map(p => col("ncluster") === col(s"qc$p"))
@@ -946,7 +870,7 @@ object VectorOpsImpl {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
     joined.withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
-      .select(col("query_id"), col("rn"), col("neighbor_id"))
+      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
   }
 
   /** q158: the nprobe SWEEP — the IVF-side twin of the dedup banding sweep
@@ -966,8 +890,7 @@ object VectorOpsImpl {
       .select(col("query_id"), col("neighbor_id"))
     val exactB = broadcast(exact.withColumn("hit", lit(1L)))
     // the probe levels are INDEPENDENT probes over the cached assignment
-    // view, each behind an eager localCheckpoint of its literal-heavy
-    // query side — submit them concurrently (Par, the ANN-panel pattern);
+    // view — submit them concurrently (Par, the ANN-panel pattern);
     // per-level one-row aggregates fold in declaration order
     val perProbe = graft.ops.Par.map(NprobeSweep) { np =>
       ivfProbeTopKN(s, dir, np)
@@ -1007,7 +930,7 @@ object VectorOpsImpl {
       .withColumnRenamed("vec_id", "neighbor_id")
     val wa = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     val short = broadcast(q).join(n, col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", adcDistance(centroidVectors(s, dir)))
+      .withColumn("adc", adcDistance("qe", pqSubBooks(centroidVectors(s, dir))))
       .withColumn("arn", row_number().over(wa))
       .filter(col("arn") <= shortlist)
       .select(col("query_id"), col("qe"), col("neighbor_id"))
@@ -1050,7 +973,7 @@ object VectorOpsImpl {
       .join(codes.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
     val joined = broadcast(q).join(c,
         col("qcluster") === col("ncluster") && col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", adcDistance(centroidVectors(s, dir)))
+      .withColumn("adc", adcDistance("qe", pqSubBooks(centroidVectors(s, dir))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     joined.withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
@@ -1113,9 +1036,6 @@ object VectorOpsImpl {
   val PqM = 8                    // subspaces
   val PqSub: Int = Dims / PqM    // dims per subspace
 
-  private def embCol(name: String)(i: Int): Column =
-    expr(s"CAST(element_at($name, $i) AS DOUBLE)")
-
   /** Product-quantization codes — THE memory-compression step of a 100 TB
     * ANN index (64 float dims → 8 byte-sized codes, 32× smaller; ADC search
     * then scans codes, not vectors). Codebook per subspace = the exact
@@ -1128,13 +1048,9 @@ object VectorOpsImpl {
     * (dist², code) structs, all inside a single codegen'd pass over the
     * scan; no join, no shuffle. Same plan discipline as [[assignAll]]. */
   private def pqCodes(s: SparkSession, dir: String): DataFrame = {
-    val cents = centroidVectors(s, dir)
-    graft.expr.NearestF64.register(s)
+    val books = pqSubBooks(centroidVectors(s, dir))
     val codeCols = (0 until PqM).map { m =>
-      val sub = cents.map { case (cl, cv) =>
-        (cl, cv.slice(m * PqSub, m * PqSub + PqSub))
-      }
-      expr(s"nearestf64(embedding, ${centersSql(sub)}, ${m * PqSub}).l")
+      NearestF64.nearest(col("embedding"), books(m), m * PqSub).getField("l")
         .as(s"code$m")
     }
     Tables(s, dir, "embeddings").select(col("vec_id") +: codeCols: _*)
@@ -1143,28 +1059,23 @@ object VectorOpsImpl {
   def pqEncode(s: SparkSession, dir: String): DataFrame =
     pqCodes(s, dir).orderBy(col("vec_id"))
 
-  /** Σ_m ‖q_sub − codebook_m[code_m]‖², unrolled left-associative in the
-    * same (subspace, dim) order as the oracle's per-subspace sums. The
-    * codebook lookup is `element_at` over a k-double array literal indexed
-    * by `array_position` of the code — a handful of bytecodes per term.
-    * The first formulation (k-way CASE per subspace, k × 8 unrolled
-    * branches) was ONE expression tree Spark cannot method-split, so the
-    * generated stage blew Janino's 64 KB method limit and silently fell
-    * back to interpreted eval (`ERROR CodeGenerator … Code grows beyond
-    * 64 KB`, ~4× slower); this form keeps every search stage inside
-    * whole-stage codegen. */
-  private def adcDistance(cents: Seq[(Long, Array[Double])]): Column = {
-    val labels = array(cents.map(c => lit(c._1)): _*)
+  /** The per-label centroids cut into the [[PqM]] subspace codebooks. */
+  private def pqSubBooks(cents: Seq[(Long, Array[Double])]): IndexedSeq[Seq[(Long, Array[Double])]] =
     (0 until PqM).map { m =>
-      val pos = array_position(labels, col(s"code$m")).cast(IntegerType)
-      (1 to PqSub).map { j =>
-        val i = m * PqSub + j
-        val cb = array(cents.map(c => lit(c._2(i - 1))): _*)
-        val d = embCol("qe")(i) - element_at(cb, pos)
-        d * d
-      }.reduce(_ + _)
-    }.reduce(_ + _)
-  }
+      cents.map { case (cl, cv) => (cl, cv.slice(m * PqSub, m * PqSub + PqSub)) }
+    }
+
+  /** Σ_m ‖q_m − books(m)[code_m]‖² of query column `q` against the
+    * candidate's code0…code7 — native (graft.expr.AdcF64Expr): one static
+    * call per row with the codebooks as one reference object. The unrolled
+    * Column tree it replaced (64 per-row k-double literal arrays plus 8
+    * `array_position` lookups, ~1,000 plan nodes per search) cost planning
+    * and codegen on every call; AdcF64's scaladoc carries the bitwise
+    * parity argument against the unrolled DuckDB oracles, and
+    * AdcF64Spec proves it row for row. */
+  private def adcDistance(q: String, books: IndexedSeq[Seq[(Long, Array[Double])]]): Column =
+    graft.expr.AdcF64.adcDistance(col(q), array((0 until PqM).map(m => col(s"code$m")): _*),
+      books)
 
   /** Asymmetric-distance (ADC) top-3 per query over the PQ codes: the query
     * stays exact, every corpus vector is reconstructed from its codes, and
@@ -1191,7 +1102,7 @@ object VectorOpsImpl {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val n = codes.withColumnRenamed("vec_id", "neighbor_id")
     val joined = broadcast(q).join(n, col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc", adcDistance(centroidVectors(s, dir)))
+      .withColumn("adc", adcDistance("qe", pqSubBooks(centroidVectors(s, dir))))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("neighbor_id"))
     joined.withColumn("rn", row_number().over(w).cast(LongType))
       .filter(col("rn") <= 3)
@@ -1226,31 +1137,27 @@ object VectorOpsImpl {
     * whose pairwise distances approximate the original within JL bounds,
     * used to pre-filter before exact math. One narrow codegen'd pass; the
     * 1/√16 = 0.25 scale is exactly representable, so both engines emit
-    * identical bits. First four projected dims exposed for the gate. */
-  def jlProject(s: SparkSession, dir: String): DataFrame = {
-    def proj(j: Int) = {
-      val sum = (1 to Dims)
-        .map(i => s"${hyperplanes(j)(i - 1)} * CAST(element_at(embedding, $i) AS DOUBLE)")
-        .mkString(" + ")
-      expr(s"($sum) * 0.25").as(s"p$j")
-    }
+    * identical bits. First four projected dims exposed for the gate.
+    *
+    * The projection is native (graft.expr.JlProjectExpr): one static call
+    * with the hyperplanes as a reference object, bitwise the unrolled
+    * 64-term chain per dim the DuckDB oracle runs (JlProjectSpec). */
+  def jlProject(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
-      .select(col("vec_id") +: (0 until 4).map(proj): _*)
+      .select(col("vec_id"), jlSketchOf(col("embedding"), 4).as("p"))
+      .select(col("vec_id") +: (0 until 4).map(j => element_at(col("p"), j + 1).as(s"p$j")): _*)
       .orderBy(col("vec_id"))
-  }
 
-  /** All 16 JL projections as columns (p0…p15) — the dense sketch table.
-    * At scale this is materialized next to the corpus like the PQ codes. */
-  private def jlSketch(s: SparkSession, dir: String): DataFrame = {
-    def proj(j: Int) = {
-      val sum = (1 to Dims)
-        .map(i => s"${hyperplanes(j)(i - 1)} * CAST(element_at(embedding, $i) AS DOUBLE)")
-        .mkString(" + ")
-      expr(s"($sum) * 0.25").as(s"p$j")
-    }
+  /** The first n JL dims of `vec` as one `array<double>`. */
+  private def jlSketchOf(vec: Column, n: Int): Column =
+    graft.expr.JlProject.jlProject(vec, hyperplanes.take(n), 0.25)
+
+  /** All 16 JL projections as one `array<double>` column `p` — the dense
+    * sketch table. At scale this is materialized next to the corpus like
+    * the PQ codes. */
+  private def jlSketch(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
-      .select(col("vec_id") +: (0 until 16).map(proj): _*)
-  }
+      .select(col("vec_id"), jlSketchOf(col("embedding"), 16).as("p"))
 
   /** Two-stage retrieval on the JL sketch: shortlist top-10 by 16-dim
     * sketch L2 (4× fewer multiply-adds per candidate than the raw 64-dim
@@ -1265,12 +1172,10 @@ object VectorOpsImpl {
   private[graft] def jlRerankPlan(s: SparkSession, dir: String, shortlist: Int): DataFrame = {
     val sk = jlSketch(s, dir)
     val q = sk.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id") +:
-        (0 until 16).map(j => col(s"p$j").as(s"qp$j")): _*)
-    val n = sk.select(col("vec_id").as("neighbor_id") +:
-      (0 until 16).map(j => col(s"p$j")): _*)
-    val d16 = (0 until 16).map { j =>
-      val d = col(s"qp$j") - col(s"p$j")
+      .select(col("vec_id").as("query_id"), col("p").as("qp"))
+    val n = sk.select(col("vec_id").as("neighbor_id"), col("p"))
+    val d16 = (1 to 16).map { j =>
+      val d = element_at(col("qp"), j) - element_at(col("p"), j)
       d * d
     }.reduce(_ + _)
     val wa = Window.partitionBy(col("query_id")).orderBy(col("d16"), col("neighbor_id"))
@@ -1966,18 +1871,26 @@ object VectorOpsImpl {
   private[graft] def annPanel(s: SparkSession, dir: String): DataFrame =
     graft.ops.Memo.getOrCache(annPanelCache, s, dir, { _ =>
       // localCheckpoint PER PATH, not .cache() on the union: a cached union
-      // keeps the nine probe plans as lineage, and analyzing that composite
-      // tree (windows + joins + k×64 baked-literal arrays per path) cost
-      // more DRIVER time than the probes cost executor time — q77 stayed
-      // ~30 s with a fully warm cache. Checkpointing each path's (queries×3)-row
-      // result truncates lineage, so the panel's consumers analyze a
-      // nine-way union of tiny LogicalRDDs instead.
+      // keeps the ten probe plans as lineage, and every consumer would
+      // re-analyze that composite tree. Checkpointing each path's
+      // (queries×3)-row result truncates lineage, so the panel's consumers
+      // analyze a ten-way union of tiny LogicalRDDs instead.
+      //
+      // Where the time went (perfbench curation seed 1, each path run
+      // alone, 4 cores): not the probes but driver-side planning and
+      // Janino codegen of literal-unrolled vector math. jl_rerank took
+      // 5.9 s for 500 vectors (a 16 × 64-term JL sketch on both sides of
+      // its self-join), ivf_multiprobe 3.1 s (a k × 64-term array_sort).
+      // The JL sketch, the ADC distances, the multi-probe ranking and the
+      // residuals are now native graft.expr kernels: 0.8 s and 0.5 s, and
+      // no path plans more than ~430 expression nodes (PlanSpec guards
+      // it; 5,300-19,600 before).
       //
       // Paths materialize CONCURRENTLY: each probe is a few-partition job
-      // (queries × k output) that cannot fill the cluster alone, and most
-      // of a path's wall time is driver-side analysis of its literal-heavy
-      // plan — both overlap safely across threads. Submitting all ten from
-      // a driver pool makes the panel cost ~max(path) instead of sum(path).
+      // (queries × k output) that cannot fill the cluster alone, and the
+      // driver-side planning overlaps safely across threads. Submitting
+      // all ten from a driver pool makes the panel cost ~max(path) instead
+      // of sum(path).
       // Shared upstream memos (kmeans/PQ models) are ConcurrentHashMap
       // computeIfAbsent-guarded, so a model builds once and late arrivals
       // block on it. The union keeps the deterministic Seq order — futures
@@ -2073,9 +1986,8 @@ object VectorOpsImpl {
     * with map-side combine — the corpus never shuffles. */
   def kmeansQuality(s: SparkSession, dir: String): DataFrame = {
     val cents = kmeansHistory(s, dir)(KmeansIters).map { case (cid, cv, _) => (cid, cv) }
-    graft.expr.NearestF64.register(s)
     Tables(s, dir, "embeddings")
-      .select(expr(s"nearestf64(embedding, ${centersSql(cents)})").as("m"))
+      .select(NearestF64.nearest(col("embedding"), cents).as("m"))
       .select(col("m.l").as("center_id"), col("m.d").as("d"))
       .groupBy(col("center_id"))
       .agg(count(lit(1)).as("n"),

@@ -27,7 +27,6 @@ object Tables {
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.expr.DotF64.register(spark) // ops emit dotf64(...) SQL; see its scaladoc
-    graft.expr.NearestF64.register(spark) // ops emit nearestf64(...) SQL likewise
     graft.expr.MinShingleMd5.register(spark) // ops emit minshinglemd5(...) SQL likewise
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")

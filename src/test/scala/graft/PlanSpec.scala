@@ -205,6 +205,31 @@ class PlanSpec extends SparkSpec {
     assert(s.contains("LessThan(vec_id,8)"), s"query filter must push into the scan:\n$s")
   }
 
+  test("ANN search plans carry no literal-unrolled vector math") {
+    // The JL sketch, the three ADC distances and the multi-probe ranking
+    // are native kernels (graft.expr.JlProjectExpr, AdcF64Expr,
+    // NearestNF64Expr, with ResidualF64Expr for the residual view);
+    // unrolled into Column text they made these analyzed plans 5,300 to
+    // 19,600 expression nodes, and that planning and codegen was most of
+    // the ANN panel's wall time. Each plan now analyzes to 160 to 430.
+    def exprNodes(df: DataFrame): Int =
+      df.queryExecution.analyzed.collectWithSubqueries { case p =>
+        p.expressions.map(_.collect { case e => e }.size).sum
+      }.sum
+    val MaxNodes = 600
+    Seq(
+      "jl_rerank" -> ops.VectorOpsImpl.jlRerankPlan(spark, dir, 10),
+      "pq_adc" -> ops.VectorOpsImpl.pqAdcTopKPlan(spark, dir),
+      "kmeans_ivfpq" -> ops.VectorOpsImpl.kmeansIvfPqTopKPlan(spark, dir),
+      "rivfpq" -> ops.VectorOpsImpl.residualIvfPqTopKPlan(spark, dir),
+      "ivf_multiprobe" -> ops.VectorOpsImpl.ivfMultiProbeTopKPlan(spark, dir)
+    ).foreach { case (path, df) =>
+      val n = exprNodes(df)
+      info(s"$path: $n analyzed expression nodes")
+      assert(n <= MaxNodes, s"$path plan has $n expression nodes (> $MaxNodes)")
+    }
+  }
+
   test("q67 keep-best broadcasts the pair-graph component map against the corpus scan") {
     val s = plan(ops.DedupOpsImpl.dedupKeepBest(spark, dir))
     assert(s.contains("BroadcastHashJoin"), s"component map must broadcast:\n$s")

@@ -114,6 +114,35 @@ class NearestF64Spec extends SparkSpec {
     assert(both == ((2L, 2L)))
   }
 
+  test("residual bitwise-equals the unrolled per-dim element_at/array_position form") {
+    // the residual IVF-PQ view's vec − center(assigned), as it was built
+    // before ResidualF64Expr: one k-double literal array per dim, indexed
+    // by array_position of the label
+    val cents = centers(seed = 31, k = K, dims = Dims)
+    val rng = new scala.util.Random(37)
+    val df = vecs(seed = 29, n = 100).map { case (id, v) =>
+      (id, v, cents(rng.nextInt(K))._1)
+    }.toDF("id", "vec", "label")
+    val labels = array(cents.map(c => lit(c._1)): _*)
+    val pos = array_position(labels, col("label")).cast("int")
+    val unrolled = array((1 to Dims).map { i =>
+      val cb = array(cents.map(c => lit(c._2(i - 1))): _*)
+      expr(s"CAST(element_at(vec, $i) AS DOUBLE)") - element_at(cb, pos)
+    }: _*)
+    val rows = df.select(col("id"),
+        NearestF64.residual(col("vec"), col("label"), cents).as("k"), unrolled.as("u"))
+      .collect()
+    assert(rows.length == 100)
+    rows.foreach { r =>
+      val k = r.getSeq[Double](1).map(java.lang.Double.doubleToLongBits)
+      val u = r.getSeq[Double](2).map(java.lang.Double.doubleToLongBits)
+      assert(k == u, s"row ${r.getLong(0)}")
+    }
+    assertThrowsWith("not in the codebook")(
+      df.withColumn("label", lit(12345L))
+        .select(NearestF64.residual(col("vec"), col("label"), cents)).collect())
+  }
+
   test("codegen agrees with interpreted eval") {
     val cents = centers(seed = 19, k = K, dims = Dims)
     val df = vecs(seed = 23, n = 50).toDF("id", "vec")

@@ -192,18 +192,28 @@ class FaultInjectionSoakSpec extends SparkSpec {
 
       val done = new AtomicBoolean(false)
       val readerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      // loops: every completed reader iteration; reads: the ones that read
+      // a version (until the first commits land, a loop only polls empty
+      // tables, tens of thousands of times a second)
+      val loops = new AtomicLong(0L)
       val reads = new AtomicLong(0L)
       val reader = new Thread(() => {
         try {
           while (!done.get()) {
             try {
+              var readOne = false
               val cv = VersionedTableImpl.currentVersion(spark, cowRoot)
-              if (cv >= 1)
+              if (cv >= 1) {
                 assert(VersionedTableImpl.readVersion(spark, cowRoot, cv).count() >= 0)
+                readOne = true
+              }
               val mv = VersionedTableImpl.currentVersion(spark, morRoot)
-              if (mv >= 1)
+              if (mv >= 1) {
                 assert(MorTableImpl.readMor(spark, morRoot, mv).count() >= 0)
-              reads.incrementAndGet()
+                readOne = true
+              }
+              loops.incrementAndGet()
+              if (readOne) reads.incrementAndGet()
             } catch {
               // a reader on a flaky store retries transient 5xx — but ONLY
               // the injected marker; any other error is a protocol bug
@@ -275,7 +285,8 @@ class FaultInjectionSoakSpec extends SparkSpec {
       }
       assert(readerErr.get() == null,
         s"continuous reader failed mid-soak: ${readerErr.get()}")
-      assert(reads.get() > 10, s"reader must have run throughout: ${reads.get()}")
+      assert(reads.get() > 10,
+        s"reader must have read versions throughout: ${reads.get()} reads in ${loops.get()} loops")
       val nInjected = FlakyFileSystem.injected.get()
       assert(nInjected > 50,
         s"the harness must actually have injected faults: $nInjected")
@@ -296,7 +307,7 @@ class FaultInjectionSoakSpec extends SparkSpec {
           "to converge at all")
       info(s"injected $nInjected faults (${markerlessIse.get()} marker-less " +
         s"ISE echoes, ${skippedCadences.get()} maintenance cadences " +
-        s"skipped), ${reads.get()} concurrent reads")
+        s"skipped), ${reads.get()} concurrent version reads in ${loops.get()} reader loops")
 
       // ---- faults off: final maintenance, then the long-haul contract
       FlakyFileSystem.disarm()

@@ -110,14 +110,20 @@ class LatencyFaultSoakSpec extends SparkSpec {
 
       val done = new AtomicBoolean(false)
       val readerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      // loops: every reader iteration; reads: the iterations that read a
+      // version (until the first commit lands, a loop only polls an empty
+      // table, tens of thousands of times a second)
+      val loops = new AtomicLong(0L)
       val reads = new AtomicLong(0L)
       val reader = new Thread(() => {
         try {
           while (!done.get()) {
             val cv = VersionedTableImpl.currentVersion(spark, cowRoot)
-            if (cv >= 1)
+            if (cv >= 1) {
               assert(VersionedTableImpl.readVersion(spark, cowRoot, cv).count() >= 0)
-            reads.incrementAndGet()
+              reads.incrementAndGet()
+            }
+            loops.incrementAndGet()
           }
         } catch { case t: Throwable => readerErr.set(t) }
       }, "latency-soak-reader")
@@ -156,12 +162,13 @@ class LatencyFaultSoakSpec extends SparkSpec {
       }
       assert(readerErr.get() == null,
         s"continuous reader failed mid-soak: ${readerErr.get()}")
-      assert(reads.get() > 10, s"reader must have run throughout: ${reads.get()}")
+      assert(reads.get() > 10,
+        s"reader must have read versions throughout: ${reads.get()} reads in ${loops.get()} loops")
       val nDelayed = FlakyFileSystem.delayed.get()
       assert(nDelayed > 50,
         s"the harness must actually have injected delays: $nDelayed")
       info(s"injected $nDelayed delays; ${loudAborts.get()} loud aborts " +
-        s"retried; ${reads.get()} concurrent reads")
+        s"retried; ${reads.get()} concurrent version reads in ${loops.get()} reader loops")
 
       // ---- latency off: the long-haul contract
       FlakyFileSystem.disarmLatency()
