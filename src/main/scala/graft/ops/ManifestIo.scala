@@ -212,15 +212,6 @@ private[ops] object ManifestIo {
     } finally rd.close()
   } catch { case _: Exception => None }
 
-  /** Segment names of ANY descriptor (COW or MOR) — the
-    * [[readDescriptorRows]] read, None on any failure. This is the
-    * tri-state "cannot tell" of [[VersionedTableImpl.committedReferences]]:
-    * its callers strand staged segments on None rather than delete them. */
-  def readDescriptorSegmentNames(conf: Configuration,
-      fs: org.apache.hadoop.fs.FileSystem, path: Path): Option[Seq[String]] =
-    try Some(readDescriptorRows(conf, fs, path)._1.map(_._1))
-    catch { case _: Exception => None }
-
   /** Driver-side read of a version DESCRIPTOR — the (segment, buckets)
     * rows plus the constant nbuckets column. A descriptor is O(live
     * segments) driver metadata by design, so every manifest resolution

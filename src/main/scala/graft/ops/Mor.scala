@@ -49,9 +49,8 @@ import graft.cdc.CdcSynth
   */
 object MorTableImpl {
 
-  import VersionedTableImpl.{fsOf, visiblePath, claimVersion, awaitOutcome,
-    currentVersion, manifestCommitted, manifestDataPath, writeSegment,
-    deleteSegment}
+  import VersionedTableImpl.{fsOf, visiblePath, currentVersion,
+    manifestDataPath, writeSegment}
 
   /** Segment names of version v's descriptor (Nil for v = 0), read on
     * the driver. A MOR descriptor is the degenerate whole-segment form —
@@ -201,80 +200,45 @@ object MorTableImpl {
       s"d${java.util.UUID.randomUUID().toString.take(8)}")
     if (deltaRows.isEmpty) return currentVersion(s, root)
     // the delta SEGMENT is written once, like the delta files: commits
-    // commute, so a lost race re-bases only the tiny descriptor
+    // commute, so a lost race re-bases only the tiny descriptor (the
+    // segment is not the attempt's own: a loss keeps it)
     val segName = writeSegmentRowsMor(s, root, deltaRows)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    val (newV, descriptorRows) = CommitProtocol.retry(s, root, "commitAppend",
+        maxAttempts, staleClaimMs) {
       val v = currentVersion(s, root)
-      val newV = v + 1
       // manifest METADATA cost is O(batch): carried descriptor rows
       // (one per live segment) + ONE new row — never the carried file
       // rows, which at a million uncompacted files would re-serialize a
       // million-row manifest per trickle commit (the round-11 weak #1)
-      val carried = morSegments(s, root, v)
-      val tmp = new Path(root,
-        s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-      VersionedTableImpl.writeDescriptorFile(s, tmp,
-        (carried :+ segName).map(_ -> None), None)
-      val claimed = VersionedTableImpl.claimVersionId(
-        s, root, newV, staleClaimMs)
-      var beaten = false
-      if (claimed.isDefined) {
-        val won =
-          try { VersionedTableImpl.publish(fs, tmp, visiblePath(root, newV),
-            "commitAppend"); true }
-          catch {
-            case _: IllegalStateException // beaten via takeover edge
-              if manifestCommitted(fs, visiblePath(root, newV)) =>
-              beaten = true; false
-            case e: Throwable => // failed without committing: unblock
-              VersionedTableImpl.releaseClaim(s, root, newV, claimed.get, staleClaimMs)
-              throw e
-          }
-        if (won) {
-          // AUTO-BOUND the descriptor from the metadata already in hand
-          // (carried rows + the one just appended — no extra I/O): past
-          // the bound, fold now instead of trusting an operator-configured
-          // cadence that may not exist. The fold is SCOPED
-          // ([[compactOverFairShare]]): any committed compaction collapses
-          // the descriptor to 2 rows via the carried-row consolidation, so
-          // folding only the over-represented buckets restores the
-          // metadata bound at a latency comparable to the delta commit
-          // itself — the unlucky triggering caller no longer absorbs an
-          // O(table) rewrite (round-13 advisory). Synchronous by design:
-          // an async maintenance thread would silently make every
-          // auto-compacting MOR table multi-writer, invalidating the
-          // grace-0 vacuum cadence the single-writer contract permits.
-          // Best-effort: the append IS committed, so a fold that loses
-          // its claim (a racer is mid-commit) or fails outright must not
-          // fail the caller — the descriptor stays over bound and the
-          // next delta commit re-triggers.
-          if (autoCompact && carried.size + 1 > autoCompactBound(nBuckets))
-            try compactOverFairShare(s, root, nBuckets, staleClaimMs)
-            catch { case e: Exception =>
-              org.slf4j.LoggerFactory.getLogger(getClass).error(
-                s"auto-compaction after MOR commit v$newV at $root failed; " +
-                  "descriptor stays over bound until the next trigger", e)
-            }
-          return newV
-        }
-      }
-      // lost: delta files + delta segment stay valid (commits commute);
-      // only the descriptor dies before the re-base retry. A BEATEN
-      // publish first checks whether the "racer" was us (response-lost
-      // PUT with failing read-backs — the committed descriptor then
-      // references OUR delta segment): ours → the commit stands.
-      if (beaten && VersionedTableImpl.committedReferences(s, fs,
-          visiblePath(root, newV), Seq(segName)).contains(true))
-        return newV // we won, response-lost
-      fs.delete(tmp, true)
-      if (attempt >= maxAttempts)
-        throw new IllegalStateException(
-          s"commitAppend lost $maxAttempts optimistic attempts at $root")
-      awaitOutcome(s, root, newV, staleClaimMs)
+      val descriptor = (morSegments(s, root, v) :+ segName).map(_ -> None)
+      val outcome = CommitProtocol.attempt(s, root, v + 1, "commitAppend",
+        staleClaimMs = staleClaimMs)(
+        VersionedTableImpl.writeDescriptorFile(s, _, descriptor, None))
+      if (outcome.won) Right((v + 1, descriptor.size)) else Left(v + 1)
     }
-    -1 // unreachable
+    // AUTO-BOUND the descriptor from the metadata already in hand (the
+    // committed descriptor's row count — no extra I/O): past the bound,
+    // fold now instead of trusting an operator-configured cadence that
+    // may not exist. The fold is SCOPED ([[compactOverFairShare]]): any
+    // committed compaction collapses the descriptor to 2 rows via the
+    // carried-row consolidation, so folding only the over-represented
+    // buckets restores the metadata bound at a latency comparable to the
+    // delta commit itself — the unlucky triggering caller no longer
+    // absorbs an O(table) rewrite (round-13 advisory). Synchronous by
+    // design: an async maintenance thread would silently make every
+    // auto-compacting MOR table multi-writer, invalidating the grace-0
+    // vacuum cadence the single-writer contract permits. Best-effort: the
+    // append IS committed, so a fold that loses its claim (a racer is
+    // mid-commit) or fails outright must not fail the caller — the
+    // descriptor stays over bound and the next delta commit re-triggers.
+    if (autoCompact && descriptorRows > autoCompactBound(nBuckets))
+      try compactOverFairShare(s, root, nBuckets, staleClaimMs)
+      catch { case e: Exception =>
+        org.slf4j.LoggerFactory.getLogger(getClass).error(
+          s"auto-compaction after MOR commit v$newV at $root failed; " +
+            "descriptor stays over bound until the next trigger", e)
+      }
+    newV
   }
 
   /** All rows of version v's files, unmerged — optionally restricted to
@@ -547,36 +511,13 @@ object MorTableImpl {
       val newRows = moveStaged(s, root, staging, "base", s"c$newV")
       val consSeg = writeCons(over)
       val baseSeg = writeSegmentRowsMor(s, root, newRows)
-      val tmp = new Path(root,
-        s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-      VersionedTableImpl.writeDescriptorFile(s, tmp,
-        Seq((consSeg, None), (baseSeg, None)), None)
-      // COMMIT POINT: claim only now, with nothing slow left to do
-      val cid = VersionedTableImpl.claimVersionId(
-        s, root, newV, staleClaimMs).getOrElse {
-        fs.delete(tmp, true) // moved base files strand until vacuum
-        deleteSegment(fs, root, consSeg); deleteSegment(fs, root, baseSeg)
-        return None
-      }
-      try VersionedTableImpl.publish(fs, tmp, visiblePath(root, newV), "MOR compaction")
-      catch {
-        case _: IllegalStateException // beaten via takeover edge: yield —
-          // unless the committed manifest is OURS (response-lost publish):
-          // deleting consSeg/baseSeg would gut the committed fold
-          if manifestCommitted(fs, visiblePath(root, newV)) =>
-          VersionedTableImpl.committedReferences(s, fs,
-              visiblePath(root, newV), Seq(consSeg, baseSeg)) match {
-            case Some(true) => return Some(newV)
-            case Some(false) =>
-              fs.delete(tmp, true)
-              deleteSegment(fs, root, consSeg); deleteSegment(fs, root, baseSeg)
-              return None
-            case None => fs.delete(tmp, true); return None
-          }
-        case e: Throwable => // failed without committing: unblock the version
-          VersionedTableImpl.releaseClaim(s, root, newV, cid, staleClaimMs); throw e
-      }
-      Some(newV)
+      // COMMIT POINT: claim only now, with nothing slow left to do; a
+      // loss strands the moved base files until vacuum
+      val outcome = CommitProtocol.attempt(s, root, newV, "MOR compaction",
+        own = Seq(consSeg, baseSeg), staleClaimMs = staleClaimMs)(
+        VersionedTableImpl.writeDescriptorFile(s, _,
+          Seq((consSeg, None), (baseSeg, None)), None))
+      if (outcome.won) Some(newV) else None
     } finally close()
 
   /** Sentinel `maxFiles` for [[compactMor]]: scope the fold to buckets

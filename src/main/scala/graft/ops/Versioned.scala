@@ -49,23 +49,9 @@ import graft.cdc.CdcSynth
   *    the retention window from a vacuum racing a commit that has moved
   *    files but not yet written its manifest.
   *
-  * CONCURRENT WRITERS (optimistic concurrency, Iceberg-style): every
-  * committer does its work against the version it read, then tries to
-  * claim the next version number with an atomic create-no-overwrite of
-  * `_versions/v{N}.claim`. Exactly one create succeeds; the winner then
-  * renames its staged manifest to the visible (or WAP-pending) path — the
-  * only writer of that path, so the rename is conflict-free. A loser
-  * deletes its staged manifest, waits for the winner's manifest to appear
-  * (or the claim to be released by a rejected WAP audit), RE-MERGES
-  * against the new current state, and retries — bounded by
-  * `maxAttempts`; its first attempt's already-moved data files are
-  * unreferenced and vacuum-eligible immediately. A claimant that crashes
-  * between claim and manifest rename leaves a stale claim; any later
-  * committer breaks a claim older than `staleClaimMs` with no manifest
-  * behind it (takeover). This is the engine's analogue of the reference's
-  * DynamoDB lease coordination (KCLScheduler.java:105) — arbitration
-  * through an atomic store primitive, here the filesystem's atomic
-  * create.
+  * CONCURRENT WRITERS: every write path claims, publishes and decides
+  * its version through [[CommitProtocol]] (optimistic concurrency with
+  * atomic claim markers and stale-claim takeover; see its scaladoc).
   *
   * Confluence contract: concurrent writers of the same key serialize to
   * the same state in ANY commit order — upserts because the higher seq
@@ -218,7 +204,7 @@ object VersionedTableImpl {
     try out.write("conditional-create".getBytes("UTF-8")) finally out.close()
   }
 
-  private def conditionalCommitFor(fs: org.apache.hadoop.fs.FileSystem,
+  private[ops] def conditionalCommitFor(fs: org.apache.hadoop.fs.FileSystem,
       dest: Path): Boolean =
     conditionalCommit(fs) || // dest = <root>/_versions/<name>
       fs.exists(new Path(dest.getParent.getParent, "_commit_mode"))
@@ -267,7 +253,7 @@ object VersionedTableImpl {
       p: Path): Path = if (fs.exists(p)) p else ptrOf(p)
 
   /** The visible counterpart of a PENDING manifest path (None when `p` is
-    * not a pending path) — the pair [[publish]] promotes between. */
+    * not a pending path) — the pair [[CommitProtocol.publish]] promotes between. */
   private def visibleCounterpart(p: Path): Option[Path] = {
     val n = p.getName
     if (n.startsWith(".pending-")) Some(new Path(p.getParent, n.stripPrefix(".pending-")))
@@ -281,7 +267,7 @@ object VersionedTableImpl {
     * the pointer names a deleted dir and readers crash rather than
     * seeing not-committed).
     *
-    * GUARD: a pending pointer can OUTLIVE its promote — [[publish]]
+    * GUARD: a pending pointer can OUTLIVE its promote — [[CommitProtocol.publish]]
     * crashes between the visible-pointer PUT (the commit point) and the
     * consume-delete of the pending pointer — and then this pending's data
     * dir IS the committed visible version's data dir. Deleting it would
@@ -299,7 +285,7 @@ object VersionedTableImpl {
     fs.delete(p, true)
   }
 
-  /** Drop a CONSUMED pending pointer left by a crash inside [[publish]]'s
+  /** Drop a CONSUMED pending pointer left by a crash inside [[CommitProtocol.publish]]'s
     * promote (between the visible-pointer PUT and the pending-pointer
     * delete): the visible counterpart is committed and names the SAME
     * data dir, so the pending pointer is pure garbage — but garbage that
@@ -348,153 +334,10 @@ object VersionedTableImpl {
       case e: java.io.IOException => if (isFnfChain(e)) Absent else Unknown
     }
 
-  /** After a publish reported "beaten" at a committed `dest`: does the
-    * committed manifest reference any of OUR staged segments — i.e., was
-    * the "racer" actually us, with the pointer PUT's response lost and
-    * its read-backs failing? The beaten path's cleanup deletes the
-    * attempt's staged segments; when the committed manifest IS ours,
-    * that deletion guts the committed version (the round-15 scripted
-    * response-lost schedule caught exactly this). Tri-state:
-    * Some(true) = ours (the commit stands — return it won),
-    * Some(false) = positively a racer's (delete is safe),
-    * None = cannot tell (strand the segments; vacuum's segment sweep
-    * reclaims dead ones later). */
-  private[ops] def committedReferences(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dest: Path,
-      segs: Seq[String]): Option[Boolean] =
-    try manifestDataPath(fs, dest).flatMap { dp =>
-      ManifestIo.readDescriptorSegmentNames(
-        s.sparkContext.hadoopConfiguration, fs, dp)
-        .map { names => val set = names.toSet; segs.exists(set) }
-    } catch {
-      // a degraded read path here means "cannot tell" — exactly None's
-      // contract (the caller strands rather than deletes)
-      case _: java.io.IOException => None
-    }
-
-  /** Checked publish: the single commit point — an atomic rename, or in
-    * conditional-create mode one create-exclusive pointer PUT (see the
-    * mode note above) — followed by an mtime stamp: rename PRESERVES the
-    * source file's mtime on POSIX/HDFS, so without the stamp a WAP
-    * manifest staged at 10:00 and published at 10:10 would read as
-    * committed at 10:00 and [[versionAsOf]] would resolve state that was
-    * not yet visible at the queried instant. A crash between the commit
-    * point and the stamp leaves that (documented, one-commit) skew. */
-  private[ops] def publish(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: Path, dest: Path, what: String): Unit = {
-    // FAIL CLOSED on a pre-existing destination: local-fs rename(2)
-    // OVERWRITES an existing target and returns true, so the rename result
-    // alone can never catch a double-publish where it matters most — it
-    // would silently clobber a committed manifest (a lost batch). The
-    // explicit existence check makes any claim-protocol violation loud;
-    // the small check-then-rename window is acceptable defense-in-depth
-    // BEHIND the claim protocol (which is what actually serializes
-    // publishers), not a replacement for it. In conditional-create mode
-    // the pointer PUT itself fails atomically on an existing destination —
-    // there the fail-closed check IS the commit primitive.
-    if (manifestCommitted(fs, dest))
-      throw new IllegalStateException(
-        s"$what held the claim but $dest already exists — claim invariant " +
-          "violated (refusing to overwrite a committed manifest)")
-    if (conditionalCommitFor(fs, dest)) {
-      // `tmp` is either a freshly staged manifest dir, or (promoting a
-      // WAP/txn pending to visible) an already-committed POINTER whose
-      // data dir is immutable and stays where it is.
-      val tmpPtr = ptrOf(tmp)
-      val promoting = fs.exists(tmpPtr)
-      val data: Path =
-        if (promoting)
-          manifestDataPath(fs, tmp).getOrElse(throw new IllegalStateException(
-            s"$what: pending pointer $tmpPtr vanished mid-promote"))
-        else {
-          // rename is allowed to be non-atomic here: the target name is
-          // dot-prefixed (invisible to version listings), publisher-unique
-          // (no shared mutable path even if two takeover racers publish
-          // the same version), and nothing reads it until the pointer —
-          // the actual commit point — names it.
-          val d = new Path(dest.getParent, s".data-${dest.getName}-" +
-            java.util.UUID.randomUUID().toString.replace("-", ""))
-          if (!fs.rename(tmp, d))
-            throw new IllegalStateException(
-              s"$what: staging rename to $d failed")
-          d
-        }
-      val destPtr = ptrOf(dest)
-      // The pointer PUT's IOException is AMBIGUOUS on a real store: the
-      // conditional PUT can land server-side with only the RESPONSE lost,
-      // and treating every IOException as "lost" then deletes the data
-      // dir the COMMITTED pointer names — destroying a live version
-      // (found by the round-14 fault-injection soak the moment
-      // response-lost faults were injected). Disambiguate by CONTENT: the
-      // data-dir name is publisher-unique (uuid-suffixed), so reading the
-      // pointer back says exactly who won. Absent pointer = the PUT
-      // genuinely did not land; since we still hold the claim (nobody
-      // else may publish this version outside the takeover edge), a
-      // bounded in-place retry is safe and keeps a transient 5xx from
-      // aborting an otherwise-finished commit.
-      var won = false
-      var beaten = false
-      var attempt = 0
-      while (!won && !beaten) {
-        attempt += 1
-        try {
-          val out = fs.create(destPtr, false) // THE commit point
-          try out.write(data.getName.getBytes("UTF-8")) finally out.close()
-          won = true
-        } catch { case e: java.io.IOException =>
-          readBack(fs, destPtr) match {
-            case Got(n) if n == data.getName => won = true // response lost
-            case Got(_) => beaten = true // a racer's pointer stands
-            case _ if attempt < 4 => Thread.sleep(50L * attempt)
-            case Absent =>
-              // POSITIVELY absent (the store answered "no such object"):
-              // the PUT genuinely never landed — the staged copy is
-              // unreferenced garbage and may be deleted
-              if (!promoting) fs.delete(data, true)
-              throw new IllegalStateException(
-                s"$what: pointer PUT to $destPtr kept failing with the " +
-                  "pointer positively absent (store rejecting writes?)", e)
-            case Unknown =>
-              // the READ path is failing too: the PUT may have landed with
-              // only the response lost, in which case the pointer NAMES
-              // `data` and deleting it would destroy the committed
-              // version. STRAND the uuid-named dir instead — if the
-              // pointer stands, the dir IS the version's data; if it turns
-              // out absent, the age-gated [[sweepStranded]] reclaims it
-              // (it positively re-checks the pointer before touching a
-              // `.data-` dir).
-              throw new IllegalStateException(
-                s"$what: pointer PUT to $destPtr failed and the read-back " +
-                  s"also fails after $attempt attempts — pointer state " +
-                  s"UNKNOWN; leaving staged data dir $data for " +
-                  "sweepStranded (deleting it could destroy a committed " +
-                  "version if the PUT landed response-lost)", e)
-          }
-        }
-      }
-      if (beaten) {
-        if (!promoting) fs.delete(data, true) // our staged copy is garbage
-        throw new IllegalStateException(
-          s"$what held the claim but $dest already exists — claim invariant " +
-            "violated (refusing to overwrite a committed manifest)")
-      }
-      if (promoting) fs.delete(tmpPtr, false) // consume the pending pointer
-      try fs.setTimes(destPtr, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () } // stamp is best-effort
-    } else {
-      if (!fs.rename(tmp, dest))
-        throw new IllegalStateException(
-          s"$what held the claim but the manifest rename to $dest failed — " +
-            "claim invariant violated")
-      try fs.setTimes(dest, System.currentTimeMillis(), -1)
-      catch { case _: java.io.IOException => () } // stamp is best-effort
-    }
-  }
-
   /** Time travel AS OF a wall-clock instant (Delta's `timestampAsOf`,
     * Iceberg's snapshot-at-timestamp): the highest version whose manifest
     * was PUBLISHED at or before `tsMillis` — the publish rename is the
-    * commit point and [[publish]] re-stamps the manifest's mtime at that
+    * commit point and [[CommitProtocol.publish]] re-stamps the manifest's mtime at that
     * moment, so the visible manifest's mtime IS the commit time.
     * Returns 0 (empty table) for instants before the first commit.
     * Metadata-only: one directory listing, no manifest is opened. */
@@ -560,7 +403,7 @@ object VersionedTableImpl {
   }
 
   /** [[writeSegment]] for DRIVER-RESIDENT rows — what every COW commit
-    * path has in hand after [[moveStagedRewrite]]: one [[ManifestIo]]
+    * path has in hand after [[writeStaged]]: one [[ManifestIo]]
     * ParquetWriter pass, NO Spark job, a single-FILE segment. The job
     * launch + committer round-trip of a one-task write was about half the
     * trickle commit's wall-clock constant (round-12 minor #4). The rows
@@ -749,29 +592,44 @@ object VersionedTableImpl {
       buckets: Option[Seq[Long]], lin: Lineage = Main): Seq[String] =
     liveRows(s, root, descriptorPairs(s, root, v, lin), buckets).map(_._2)
 
-  /** Stage→data move shared by every COW write path ([[commitLoop]],
-    * [[compactVersion]], [[rebucket]]): list the staged `bucket=` dirs,
-    * rename each file to its immutable version-scoped name — loud-failure
+  /** Stage→data write shared by every COW write path ([[commitLoop]],
+    * [[compactVersion]], [[rebucket]]): write `rows` (with a `bucket`
+    * column) partitioned by bucket into a `.v_staging_<uuid>` dir, rename
+    * each staged file to its immutable version-scoped name — loud-failure
     * and executor-parallel past the fat-batch threshold (see [[Moves]]) —
     * and return the manifest rows. The QUALIFIED uri is stored (vacuum
     * compares against listStatus output, which is always scheme-qualified)
     * with the length known at write time, which is what makes table sizing
-    * a metadata aggregate. */
-  private def moveStagedRewrite(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String, staging: Path,
-      filePrefix: String): Seq[(Long, String, Long)] = {
-    val moves = fs.listStatus(staging)
-      .filter(_.getPath.getName.startsWith("bucket="))
-      .flatMap { st =>
-        val b = st.getPath.getName.stripPrefix("bucket=").toLong
-        val dest = new Path(s"$root/data/bucket=$b")
-        fs.mkdirs(dest)
-        fs.listStatus(st.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => (f, b, new Path(dest, s"$filePrefix${f.getPath.getName}")))
-      }.toSeq
-    Moves.renameAll(s, moves.map { case (f, _, to) => (f.getPath, to) })
-    moves.map { case (f, b, to) => (b, fs.makeQualified(to).toString, f.getLen) }
+    * a metadata aggregate. `uncapped` suspends any session-level record
+    * cap for the write: one file per bucket is the whole point of a
+    * maintenance rewrite, and a cap (what fragmented the merges) would
+    * re-split it so it never converges. */
+  private def writeStaged(s: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: String, rows: DataFrame,
+      filePrefix: String, uncapped: Boolean): Seq[(Long, String, Long)] = {
+    val staging = new Path(root,
+      s".v_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val capKey = "spark.sql.files.maxRecordsPerFile"
+    val prevCap = s.conf.get(capKey, "0")
+    if (uncapped) s.conf.set(capKey, "0")
+    try {
+      rows.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+      val moves = fs.listStatus(staging)
+        .filter(_.getPath.getName.startsWith("bucket="))
+        .flatMap { st =>
+          val b = st.getPath.getName.stripPrefix("bucket=").toLong
+          val dest = new Path(s"$root/data/bucket=$b")
+          fs.mkdirs(dest)
+          fs.listStatus(st.getPath)
+            .filter(_.getPath.getName.endsWith(".parquet"))
+            .map(f => (f, b, new Path(dest, s"$filePrefix${f.getPath.getName}")))
+        }.toSeq
+      Moves.renameAll(s, moves.map { case (f, _, to) => (f.getPath, to) })
+      moves.map { case (f, b, to) => (b, fs.makeQualified(to).toString, f.getLen) }
+    } finally {
+      if (uncapped) s.conf.set(capKey, prevCap)
+      fs.delete(staging, true)
+    }
   }
 
   /** The rows of exactly the files `manifestDf` lists, WITHOUT collecting
@@ -942,223 +800,8 @@ object VersionedTableImpl {
       imgType.fields.toSeq.filterNot(_.name == "user_id"))
   }
 
-  /** Atomically claim version v. Exactly one concurrent caller wins the
-    * create-no-overwrite; a stale claim (older than `staleClaimMs`, no
-    * visible or pending manifest behind it) is broken and re-claimed.
-    * Claims carry a CONTENT identity (a uuid) because the takeover
-    * re-validation below must recognize the file it renamed, and mtime
-    * cannot do that on an object store: "rename" is copy+delete there and
-    * the copy gets a FRESH Last-Modified, so an mtime re-check would
-    * always read "live" and the stale claim could never be broken — a
-    * takeover LIVELOCK (found by the objstore suite the moment the shim's
-    * conditional PUT became honest). Content survives any copy. */
-  private[ops] def claimVersion(s: SparkSession, root: String, v: Int,
-      staleClaimMs: Long, lin: Lineage = Main): Boolean =
-    claimVersionId(s, root, v, staleClaimMs, lin).isDefined
-
-  /** [[claimVersion]] returning the claim's CONTENT IDENTITY on success —
-    * what [[releaseClaim]] needs to give the version back deterministically
-    * after a publish that failed without committing (instead of wedging
-    * every writer behind the staleness window). */
-  private[ops] def claimVersionId(s: SparkSession, root: String, v: Int,
-      staleClaimMs: Long, lin: Lineage = Main): Option[String] = {
-    val fs = fsOf(s, root)
-    val claim = lin.claim(root, v)
-    fs.mkdirs(claim.getParent)
-    def tryCreate(): Option[String] = {
-      val id = java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        fs match {
-          case _: org.apache.hadoop.fs.LocalFileSystem |
-               _: org.apache.hadoop.fs.RawLocalFileSystem =>
-            // RawLocalFileSystem's create(overwrite=false) is CHECK-THEN-
-            // ACT, not atomic: two racers can both pass its exists check
-            // and both believe they hold the claim — a double publish and
-            // a lost batch (observed as a rare MorSpec race flake, round
-            // 15: both concurrent appenders returned the same version).
-            // POSIX O_CREAT|O_EXCL is the real primitive — exactly one
-            // creator wins — and nio's CREATE_NEW maps to it. Only the
-            // genuine local fs takes this path: the object-store shims
-            // (and any wrapped scheme) implement their conditional PUT
-            // honestly and must keep being exercised through it.
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(claim.toUri.getPath),
-              id.getBytes("UTF-8"),
-              java.nio.file.StandardOpenOption.CREATE_NEW,
-              java.nio.file.StandardOpenOption.WRITE)
-          case _ =>
-            val out = fs.create(claim, false)
-            try out.write(id.getBytes("UTF-8"))
-            finally out.close()
-        }
-        Some(id)
-      }
-      catch { case _: java.io.IOException =>
-        // RESPONSE-LOST disambiguation (the publish-side lesson applied
-        // here): the conditional PUT may have landed with the response
-        // lost. Reporting a loss then leaves OUR OWN claim blocking the
-        // version until someone ages it past staleClaimMs — a self-
-        // inflicted takeover stall. The claim carries a uuid precisely so
-        // identity is readable back: ours = we hold it. An UNKNOWN
-        // read-back (the read path itself failing, not a positive
-        // absence) gets a short bounded retry before giving up: the
-        // give-up side is SAFE (single-holder is preserved — we only
-        // ever report a claim we positively proved is ours), it just
-        // wedges this writer behind its own landed claim until the
-        // staleness window, so a transient read blip should not pay it.
-        var st = readBack(fs, claim)
-        var a = 0
-        while (st == Unknown && a < 3) {
-          a += 1; Thread.sleep(50L * a); st = readBack(fs, claim)
-        }
-        st match {
-          case Got(c) if c == id => Some(id)
-          case _ => None // a racer's, positively absent, or still unknown
-        }
-      }
-    }
-    val first = tryCreate()
-    if (first.isDefined) return first
-    val published = manifestCommitted(fs, lin.visible(root, v)) ||
-      manifestCommitted(fs, lin.pending(root, v))
-    // Sample the candidate claim's CONTENT IDENTITY BEFORE the staleness
-    // determination: an id read after deciding "stale" could belong to a
-    // racer's FRESH claim (racer completes a whole takeover — break + new
-    // claim — between our mtime check and our id read), and the rename
-    // re-validation below would then treat the fresh claim as the stale
-    // one it may steal. An id sampled first can never name a claim
-    // created after the staleness decision, so "renamed file's id ==
-    // checkedId" really means "the file we judged stale". An EMPTY id is
-    // legal (a claimant that crashed between create and write leaves a
-    // contentless claim, which must stay takeover-able or the version
-    // wedges forever) and still safe: a racer's fresh claim always
-    // carries a uuid, so it can never match "". An UNKNOWN read-back
-    // (read path failing — distinct from a positive absence) forfeits
-    // the takeover attempt entirely: the aside-matching below would have
-    // to compare against content we never saw, and "" as a stand-in
-    // could steal a live claim through the empty-empty branch.
-    val checkedState = if (published) Absent else readBack(fs, claim)
-    if (!published && checkedState == Unknown) return None
-    val checkedId = checkedState match { case Got(c) => c; case _ => "" }
-    if (!published && fs.exists(claim) &&
-        System.currentTimeMillis() - fs.getFileStatus(claim).getModificationTime > staleClaimMs) {
-      // Takeover: claimant died pre-publish. Remove the stale claim by
-      // RENAME, not delete — delete-then-create would let two takeover
-      // racers both "win" (A deletes, A creates, B deletes A's LIVE
-      // claim, B creates), breaking the single-holder invariant. A
-      // rename succeeds for exactly one racer; everyone then competes
-      // through the same create-no-overwrite.
-      //
-      // The rename alone is NOT enough: between OUR staleness check and
-      // OUR rename, another racer may have broken the stale claim and
-      // created its own FRESH one — our rename then steals a LIVE claim
-      // and two holders publish the same version (caught loudly by
-      // [[publish]]'s fail-closed check; VersionedSpec's takeover race
-      // hit exactly this). So the file we actually renamed is re-validated
-      // by CONTENT identity against `checkedId` — sampled ABOVE, before
-      // the staleness determination (mtime would lie after a copy-based
-      // rename — see the scaladoc): same id ⇒ the dead claimant's file,
-      // proceed to compete; different id ⇒ a racer's fresh claim — give
-      // it back (or, if the path was re-created in the window, drop
-      // ours — the new holder stands) and report no claim.
-      val aside = new Path(root, s"_versions/.dead-claim-${lin.prefix}$v-" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      try {
-        if (fs.rename(claim, aside)) {
-          val asideState = readBack(fs, aside)
-          val asideId = asideState match { case Got(c) => c; case _ => "" }
-          // an UNKNOWN aside read-back (read path failing) routes to the
-          // give-back branch below via the non-match: we renamed a file
-          // whose identity we cannot verify, so the only safe move is to
-          // put it back and report no claim.
-          // an EMPTY id cannot discriminate on plain POSIX: a racer's
-          // fresh claim is briefly contentless there (create → write is
-          // not atomic), so "" == "" could steal a live mid-create claim —
-          // fall back to the renamed file's OWN mtime, trustworthy on
-          // POSIX where rename preserves it. On conditional-PUT stores the
-          // empty-mid-create window cannot exist (the PUT is atomic WITH
-          // its body), so an empty aside really is the dead claim we
-          // judged stale — and the mtime is NOT consulted there, because a
-          // copy-based rename refreshes it and would livelock the
-          // takeover (the round-11 lesson, re-learned by this round's
-          // objstore racing suite).
-          val matches =
-            if (asideState == Unknown) false
-            else if (checkedId.nonEmpty) asideId == checkedId
-            else asideId.isEmpty && (
-              conditionalCommit(fs) ||
-              fs.exists(new Path(root, "_commit_mode")) ||
-              scala.util.Try(
-                System.currentTimeMillis() -
-                  fs.getFileStatus(aside).getModificationTime > staleClaimMs)
-                .getOrElse(false))
-          if (matches)
-            fs.delete(aside, false) // genuinely the dead claimant's file
-          else {
-            if (fs.exists(claim) || !fs.rename(aside, claim))
-              fs.delete(aside, false)
-            return None
-          }
-        }
-      } catch { case _: java.io.IOException => () }
-      tryCreate()
-    } else None
-  }
-
-  /** Best-effort release of OUR claim on v after a publish that failed
-    * WITHOUT committing: delete the claim only while its content still
-    * carries `id` (a takeover thief's fresh claim stays put), so the
-    * version unblocks immediately instead of wedging every writer behind
-    * the staleness window. Quiet on I/O failure — staleness remains the
-    * backstop, exactly as for a crashed claimant.
-    *
-    * AGE-GUARDED: the read-content-then-delete pair is non-atomic, and
-    * once the claim's age exceeds `staleClaimMs` a takeover racer may
-    * legally swap it between our read and our delete — deleting the
-    * racer's LIVE claim would let a third writer claim the same version
-    * and end in a spurious loud "claim invariant" abort for one of them.
-    * A claim that old is about to be broken by staleness anyway, so the
-    * release buys nothing there: skip it. Inside the window no takeover
-    * is legal, so read-then-delete cannot race one. */
-  private[ops] def releaseClaim(s: SparkSession, root: String, v: Int,
-      id: String, staleClaimMs: Long = 60000L, lin: Lineage = Main): Unit =
-    try {
-      val fs = fsOf(s, root)
-      val claim = lin.claim(root, v)
-      val age = System.currentTimeMillis() -
-        fs.getFileStatus(claim).getModificationTime
-      if (age <= staleClaimMs) {
-        readBack(fs, claim) match {
-          case Got(cur) if cur == id => fs.delete(claim, false)
-          case _ => () // a thief's claim, absent, or unreadable: leave it
-        }
-      }
-    } catch { case _: java.io.IOException => () }
-
-  /** After losing a claim on v: wait for the winner's VISIBLE manifest to
-    * appear (then the retry re-merges against it), for the claim to be
-    * released (rejected WAP audit — v is up for grabs again), or for the
-    * claim to go stale with nothing behind it (dead claimant — takeover
-    * candidate). A PENDING manifest keeps the wait alive: the version
-    * number is reserved until its audit publishes or rejects. Bounded by
-    * the staleness window plus slack. */
-  private[ops] def awaitOutcome(s: SparkSession, root: String, v: Int,
-      staleClaimMs: Long, lin: Lineage = Main): Unit = {
-    val fs = fsOf(s, root)
-    val deadline = System.currentTimeMillis() + staleClaimMs + 10000L
-    while (System.currentTimeMillis() < deadline) {
-      if (manifestCommitted(fs, lin.visible(root, v)) ||
-        !fs.exists(lin.claim(root, v))) return
-      val pendingAudit = manifestCommitted(fs, lin.pending(root, v))
-      val stale = !pendingAudit &&
-        System.currentTimeMillis() - fs.getFileStatus(lin.claim(root, v)).getModificationTime > staleClaimMs
-      if (stale) return
-      Thread.sleep(25L)
-    }
-  }
-
-  /** MERGE `env` into the table as version current+1 (see the object doc
-    * for the concurrency protocol). Returns the new version (current,
+  /** MERGE `env` into the table as version current+1 (see
+    * [[CommitProtocol]] for the concurrency protocol). Returns the new version (current,
     * unchanged, when the batch touches nothing). When `pendingStage` is
     * set the manifest lands at the dot-prefixed PENDING path — never
     * visible to [[currentVersion]] — for write-audit-publish. */
@@ -1251,84 +894,34 @@ object VersionedTableImpl {
       lin: Lineage = Main)
       (merge: DataFrame => DataFrame): (Int, Seq[Long]) = {
     val fs = fsOf(s, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+    CommitProtocol.retry(s, root, what, maxAttempts, staleClaimMs, lin) {
       val v = currentVersionOf(s, root, lin)
       val nBuckets = bucketsAt(s, root, v, nBucketsOrElse, lin)
       val touched = touchedOf(nBuckets)
-      if (touched.isEmpty) return (v, Nil)
-      val newV = v + 1
-      val base = readBuckets(s, root, v, touched, emptySchema, lin)
-      val merged = merge(base)
-        .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
-      val staging = new Path(root,
-        s".v_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-      val newFiles: Seq[(Long, String, Long)] =
-        try {
-          merged.write.mode("overwrite").partitionBy("bucket")
-            .parquet(staging.toString)
-          moveStagedRewrite(s, fs, root, staging, lin.filePrefix(newV))
-        } finally fs.delete(staging, true)
-      // NEW SEGMENT: the touched buckets' complete new file rows —
-      // O(touched). DESCRIPTOR: carried segments with the touched buckets
-      // masked out of their arrays, plus the new mapping — O(live
-      // segments) driver-side metadata. The carried FILE rows are never
-      // copied: per-commit manifest metadata stays O(batch).
-      val segName = writeSegmentRows(s, root, newFiles)
-      val carried = carriedMasked(root, descriptorPairs(s, root, v, lin), touched)
-      val tmp = new Path(root,
-        s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-      writeDescriptorFile(s, tmp,
-        carried :+ ((segName, Some(touched): Option[Seq[Long]])),
-        Some(nBuckets.toLong))
-      // COMMIT POINT: atomic claim, then the single manifest rename. A
-      // fail-closed publish (destination already exists) means the
-      // claim's exclusivity was beaten through the takeover protocol's
-      // outermost race window — the OTHER publisher's batch is committed
-      // and intact, so ours re-merges like any lost race instead of
-      // dying loudly; any other publish failure still throws.
-      var beaten = false
-      claimVersionId(s, root, newV, staleClaimMs, lin).foreach { cid =>
-        val dest = if (pendingStage) lin.pending(root, newV)
-                   else lin.visible(root, newV)
-        val won =
-          try { publish(fs, tmp, dest, what); true }
-          catch {
-            case _: IllegalStateException
-              if manifestCommitted(fs, dest) => beaten = true; false
-            case e: Throwable =>
-              // publish failed WITHOUT committing: give the version back
-              // now rather than wedging writers behind the staleness
-              // window (content-checked — a takeover thief's claim stays)
-              releaseClaim(s, root, newV, cid, staleClaimMs, lin)
-              throw e
-          }
-        if (won) return (newV, touched)
+      if (touched.isEmpty) Right((v, Nil))
+      else {
+        val newV = v + 1
+        val base = readBuckets(s, root, v, touched, emptySchema, lin)
+        val merged = merge(base)
+          .withColumn("bucket", pmod(col("user_id"), lit(nBuckets.toLong)))
+        val newFiles = writeStaged(s, fs, root, merged, lin.filePrefix(newV),
+          uncapped = false)
+        // NEW SEGMENT: the touched buckets' complete new file rows —
+        // O(touched). DESCRIPTOR: carried segments with the touched buckets
+        // masked out of their arrays, plus the new mapping — O(live
+        // segments) driver-side metadata. The carried FILE rows are never
+        // copied: per-commit manifest metadata stays O(batch). A lost
+        // attempt's segment dies with it (the retry re-merges and writes a
+        // fresh one); its moved data files are vacuum-eligible.
+        val segName = writeSegmentRows(s, root, newFiles)
+        val carried = carriedMasked(root, descriptorPairs(s, root, v, lin), touched)
+        val outcome = CommitProtocol.attempt(s, root, newV, what, lin,
+          pendingStage, Seq(segName), staleClaimMs)(writeDescriptorFile(s, _,
+            carried :+ ((segName, Some(touched): Option[Seq[Long]])),
+            Some(nBuckets.toLong)))
+        if (outcome.won) Right((newV, touched)) else Left(newV)
       }
-      // lost the race: staged descriptor + this attempt's segments die now
-      // (the retry re-merges and writes fresh ones); the moved data files
-      // are unreferenced (vacuum-eligible). UNLESS the "racer" at a
-      // beaten publish was US — a response-lost pointer PUT whose
-      // read-backs all failed: the committed manifest then references
-      // the staged segment, and deleting it guts the committed version.
-      // Disambiguate by the committed descriptor's CONTENT; on an
-      // unreadable descriptor, strand the segments (vacuum's segment
-      // sweep reclaims dead ones) rather than risk the live ones.
-      val raceVerdict: Option[Boolean] =
-        if (!beaten) Some(false) // claim lost: nothing of ours published
-        else committedReferences(s, fs,
-          if (pendingStage) lin.pending(root, newV) else lin.visible(root, newV),
-          Seq(segName))
-      if (raceVerdict.contains(true)) return (newV, touched) // we won, response-lost
-      fs.delete(tmp, true)
-      if (raceVerdict.contains(false)) deleteSegment(fs, root, segName)
-      if (attempt >= maxAttempts)
-        throw new IllegalStateException(
-          s"$what lost $maxAttempts optimistic attempts at $root (last target ${lin.prefix}$newV)")
-      awaitOutcome(s, root, newV, staleClaimMs, lin)
     }
-    (-1, Nil) // unreachable
   }
 
   /** General three-clause MERGE INTO the versioned table — the
@@ -1441,11 +1034,13 @@ object VersionedTableImpl {
       .filter(!col("last_op").isin(LakehouseOpsImpl.DeleteOps: _*)) // live state
     audit(staged) match {
       case None =>
-        publish(fs, pending, visiblePath(root, newV), "WAP publish")
+        val outcome = CommitProtocol.promote(s, root, newV, "WAP publish")
+        if (!outcome.won)
+          throw new IllegalStateException(s"WAP publish held the claim but " +
+            s"v$newV was $outcome at $root — claim invariant violated")
         Right(newV)
       case Some(reason) =>
-        deleteManifest(fs, pending)
-        fs.delete(claimPath(root, newV), false) // release N for the next commit
+        abortPending(s, root, newV) // release N for the next commit
         Left(reason)
     }
   }
@@ -2036,7 +1631,7 @@ object VersionedTableImpl {
     * looks like a dead claimant, a concurrent [[commitMerge]] legitimately
     * breaks the claim and publishes v+1, and the finishing compactor's
     * rename would then clobber that committed manifest (local-fs rename
-    * overwrites — and even with [[publish]]'s fail-closed check, the batch
+    * overwrites — and even with [[CommitProtocol.publish]]'s fail-closed check, the batch
     * would die loudly instead of compaction yielding quietly). With
     * claim-at-the-end a successful claim PROVES v is still current (a
     * racer's publish of v+1 leaves its claim file behind); a lost claim
@@ -2080,53 +1675,16 @@ object VersionedTableImpl {
     val rows =
       if (sortCols.isEmpty) bucketed
       else bucketed.sortWithinPartitions(col("bucket") +: sortCols.map(col): _*)
-    val staging = new Path(root,
-      s".v_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    // one file per bucket is the whole point of the rewrite: suspend any
-    // session-level record cap (which is what fragmented the merges) for
-    // the compaction write, or the rewrite re-splits and never converges
-    val prevCap = s.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    s.conf.set("spark.sql.files.maxRecordsPerFile", "0")
-    val newFiles: Seq[(Long, String, Long)] =
-      try {
-        rows.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-        moveStagedRewrite(s, fs, root, staging, s"v$newV-")
-      } finally {
-        s.conf.set("spark.sql.files.maxRecordsPerFile", prevCap)
-        fs.delete(staging, true)
-      }
+    val newFiles = writeStaged(s, fs, root, rows, s"v$newV-", uncapped = true)
     // layered manifest: one segment for the rewritten buckets, carried
     // descriptor rows masked (the commitLoop discipline — O(segments)
     // metadata, never the carried file rows)
     val segName = writeSegmentRows(s, root, newFiles)
     val carried = carriedMasked(root, pairs, counts)
-    val tmp = new Path(root,
-      s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-    writeDescriptorFile(s, tmp,
-      carried :+ ((segName, Some(counts): Option[Seq[Long]])), Some(nb.toLong))
-    // COMMIT POINT: claim only now, with nothing slow left before publish
-    val cid = claimVersionId(s, root, newV, staleClaimMs).getOrElse {
-      fs.delete(tmp, true) // moved rewrite files strand until vacuum
-      deleteSegment(fs, root, segName)
-      return None
-    }
-    try publish(fs, tmp, visiblePath(root, newV), "compaction")
-    catch {
-      case _: IllegalStateException // beaten via takeover edge: yield —
-        // unless the committed manifest is OURS (response-lost publish
-        // whose read-backs failed): deleting the staged segments would
-        // gut it. Content-checked; unknown strands (vacuum reclaims).
-        if manifestCommitted(fs, visiblePath(root, newV)) =>
-        committedReferences(s, fs, visiblePath(root, newV), Seq(segName)) match {
-          case Some(true) => return Some(newV)
-          case Some(false) =>
-            fs.delete(tmp, true); deleteSegment(fs, root, segName); return None
-          case None => fs.delete(tmp, true); return None
-        }
-      case e: Throwable => // failed without committing: unblock the version
-        releaseClaim(s, root, newV, cid, staleClaimMs); throw e
-    }
-    Some(newV)
+    val outcome = CommitProtocol.attempt(s, root, newV, "compaction",
+      own = Seq(segName), staleClaimMs = staleClaimMs)(writeDescriptorFile(s, _,
+        carried :+ ((segName, Some(counts): Option[Seq[Long]])), Some(nb.toLong)))
+    if (outcome.won) Some(newV) else None // a loss strands the moved files until vacuum
   }
 
   /** REBUCKET: commit a NEW state-identical version laid out over
@@ -2162,45 +1720,14 @@ object VersionedTableImpl {
       .withColumn("bucket", pmod(col("user_id"), lit(newBuckets.toLong)))
       .repartition(newBuckets, col("bucket"))
       .sortWithinPartitions(col("bucket"), col("user_id"))
-    val staging = new Path(root,
-      s".v_staging_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    val prevCap = s.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    s.conf.set("spark.sql.files.maxRecordsPerFile", "0")
-    val newFiles: Seq[(Long, String, Long)] =
-      try {
-        rows.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-        moveStagedRewrite(s, fs, root, staging, s"v$newV-")
-      } finally {
-        s.conf.set("spark.sql.files.maxRecordsPerFile", prevCap)
-        fs.delete(staging, true)
-      }
+    val newFiles = writeStaged(s, fs, root, rows, s"v$newV-", uncapped = true)
     // a rebucket rewrites everything: one fresh segment, one-row descriptor
     val segName = writeSegmentRows(s, root, newFiles)
     val covered = newFiles.map(_._1).distinct.sorted
-    val tmp = new Path(root,
-      s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-    writeDescriptorFile(s, tmp,
-      Seq((segName, Some(covered): Option[Seq[Long]])), Some(newBuckets.toLong))
-    val cid = claimVersionId(s, root, newV, staleClaimMs).getOrElse {
-      fs.delete(tmp, true) // staged files strand until vacuum
-      deleteSegment(fs, root, segName)
-      return None
-    }
-    try publish(fs, tmp, visiblePath(root, newV), "rebucket")
-    catch {
-      case _: IllegalStateException // beaten via takeover edge: yield —
-        // same response-lost self-win disambiguation as compactVersion
-        if manifestCommitted(fs, visiblePath(root, newV)) =>
-        committedReferences(s, fs, visiblePath(root, newV), Seq(segName)) match {
-          case Some(true) => return Some(newV)
-          case Some(false) =>
-            fs.delete(tmp, true); deleteSegment(fs, root, segName); return None
-          case None => fs.delete(tmp, true); return None
-        }
-      case e: Throwable => // failed without committing: unblock the version
-        releaseClaim(s, root, newV, cid, staleClaimMs); throw e
-    }
-    Some(newV)
+    val outcome = CommitProtocol.attempt(s, root, newV, "rebucket",
+      own = Seq(segName), staleClaimMs = staleClaimMs)(writeDescriptorFile(s, _,
+        Seq((segName, Some(covered): Option[Seq[Long]])), Some(newBuckets.toLong)))
+    if (outcome.won) Some(newV) else None
   }
 
   /** GROWTH POLICY: rebucket when the CURRENT version's live payload has
@@ -2328,38 +1855,17 @@ object VersionedTableImpl {
     * concurrent RESTORE + VACUUM). Within the horizon the files are in
     * the live range on every pass and the race is harmless. */
   def restore(s: SparkSession, root: String, v: Int,
-      staleClaimMs: Long = 60000L, maxAttempts: Int = 5): Int = {
-    val fs = fsOf(s, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+      staleClaimMs: Long = 60000L, maxAttempts: Int = 5): Int =
+    CommitProtocol.retry(s, root, "restore", maxAttempts, staleClaimMs) {
       val cur = currentVersion(s, root)
       require(v >= 1 && v <= cur, s"restore target v$v outside [1, $cur]")
       val newV = cur + 1
-      val tmp = new Path(root,
-        s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
       // copy the DESCRIPTOR, not the resolved file rows: restore stays a
       // metadata-sized write (segments are immutable and shared)
-      copyDescriptorTo(s, root, v, tmp)
-      claimVersionId(s, root, newV, staleClaimMs).foreach { cid =>
-        val won =
-          try { publish(fs, tmp, visiblePath(root, newV), "restore"); true }
-          catch {
-            case _: IllegalStateException // beaten via takeover edge
-              if manifestCommitted(fs, visiblePath(root, newV)) => false
-            case e: Throwable => // failed without committing: unblock
-              releaseClaim(s, root, newV, cid, staleClaimMs); throw e
-          }
-        if (won) return newV
-      }
-      fs.delete(tmp, true)
-      if (attempt >= maxAttempts)
-        throw new IllegalStateException(
-          s"restore lost $maxAttempts optimistic attempts at $root")
-      awaitOutcome(s, root, newV, staleClaimMs)
+      val outcome = CommitProtocol.attempt(s, root, newV, "restore",
+        staleClaimMs = staleClaimMs)(copyDescriptorTo(s, root, v, _))
+      if (outcome.won) Right(newV) else Left(newV)
     }
-    -1 // unreachable
-  }
 
   // ------------------------------------------------------ named refs
   // Tags and branches (the Iceberg refs model: a ref is a tiny named
@@ -2459,11 +1965,13 @@ object VersionedTableImpl {
     catch { case _: java.io.IOException =>
       throw new IllegalStateException(s"branch '$name' already exists at $root") }
     // branch v0 = the fork DESCRIPTOR, copied metadata->metadata (the
-    // fork's segments are shared, not copied — a fork is O(segments))
-    val tmp = new Path(root,
-      s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-    copyDescriptorTo(s, root, fork, tmp)
-    publish(fs, tmp, lin.visible(root, 0), s"branch '$name' fork")
+    // fork's segments are shared, not copied — a fork is O(segments)).
+    // The exclusive ref create above makes this the branch's only writer.
+    val outcome = CommitProtocol.attempt(s, root, 0, s"branch '$name' fork",
+      lin)(copyDescriptorTo(s, root, fork, _))
+    if (!outcome.won)
+      throw new IllegalStateException(s"branch '$name' fork lost its v0 " +
+        s"($outcome) at $root — claim invariant violated")
     fork
   }
 
@@ -2503,7 +2011,6 @@ object VersionedTableImpl {
     * returns Left and can retry against reality. */
   def fastForward(s: SparkSession, root: String, name: String,
       staleClaimMs: Long = 60000L): Either[String, Int] = {
-    val fs = fsOf(s, root)
     val fork = branchFork(s, root, name)
     val head = branchHead(s, root, name)
     if (head == 0) return Right(fork) // nothing committed on the branch
@@ -2511,25 +2018,17 @@ object VersionedTableImpl {
     if (cur != fork)
       return Left(s"main advanced to v$cur past the fork v$fork — re-merge required")
     val newV = fork + 1
-    val tmp = new Path(root,
-      s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
-    copyDescriptorTo(s, root, head, tmp, branchLineage(name))
-    val cid = claimVersionId(s, root, newV, staleClaimMs).getOrElse {
-      fs.delete(tmp, true)
-      return Left(s"lost the claim on v$newV to a concurrent main commit")
-    }
     // the claim proves main is still at fork (a racer's publish would
     // have left its claim); publish the branch head as main's next state
-    try publish(fs, tmp, visiblePath(root, newV), s"fast-forward '$name'")
-    catch {
-      case _: IllegalStateException // beaten via takeover edge
-        if manifestCommitted(fs, visiblePath(root, newV)) =>
-        fs.delete(tmp, true)
-        return Left(s"lost v$newV to a concurrent main commit at publish")
-      case e: Throwable => // failed without committing: unblock the version
-        releaseClaim(s, root, newV, cid, staleClaimMs); throw e
+    CommitProtocol.attempt(s, root, newV, s"fast-forward '$name'",
+      staleClaimMs = staleClaimMs)(
+      copyDescriptorTo(s, root, head, _, branchLineage(name))) match {
+      case CommitProtocol.Lost =>
+        Left(s"lost the claim on v$newV to a concurrent main commit")
+      case CommitProtocol.Beaten =>
+        Left(s"lost v$newV to a concurrent main commit at publish")
+      case _ => Right(newV)
     }
-    Right(newV)
   }
 
   /** What WOULD this publish change? — the per-key INSERT/UPDATE/DELETE
@@ -2665,12 +2164,9 @@ object VersionedTableImpl {
       val v = vs.trim.toInt
       val (pending, visible) = (pendingPath(root, v), visiblePath(root, v))
       if (!manifestCommitted(fs, visible) && manifestCommitted(fs, pending))
-        try publish(fs, pending, visible, "txn publish")
-        catch {
-          // two recoverers racing the same record: the loser's fail-closed
-          // publish is a benign already-done, not a protocol violation
-          case e: IllegalStateException if manifestCommitted(fs, visible) => ()
-        }
+        // two recoverers racing the same record: the loser's Beaten is a
+        // benign already-done, not a protocol violation
+        CommitProtocol.promote(s, root, v, "txn publish")
       // a promote that crashed between the visible-pointer PUT and the
       // pending-pointer delete leaves a CONSUMED pending pointer naming
       // the visible version's own data dir — drop it here (idempotent),
@@ -2702,7 +2198,7 @@ object VersionedTableImpl {
     staged.foreach { case (root, v) => abortPending(s, root, v) }
 
   /** DESCRIBE HISTORY: one row per committed version — commit time (the
-    * publish-rename mtime, see [[publish]]), manifest file count, and the
+    * publish-rename mtime, see [[CommitProtocol.publish]]), manifest file count, and the
     * per-version LIVE file footprint — the operator surface every table
     * format ships (Delta's DESCRIBE HISTORY, Iceberg's snapshots table).
     * Pure metadata: one directory listing + the manifests' (bucket, file)

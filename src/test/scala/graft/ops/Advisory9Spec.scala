@@ -108,7 +108,7 @@ class Advisory9Spec extends SparkSpec {
     Seq((0L, "bogus")).toDF("bucket", "file")
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val e = intercept[IllegalStateException] {
-      VersionedTableImpl.publish(fs, tmp, dest, "double publish")
+      CommitProtocol.publish(fs, tmp, dest, "double publish")
     }
     assert(e.getMessage.contains("already exists"),
       s"must refuse loudly, not silently overwrite: ${e.getMessage}")

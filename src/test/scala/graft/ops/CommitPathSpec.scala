@@ -25,6 +25,10 @@ class CommitPathSpec extends SparkSpec {
 
   private val NB = 8
 
+  /** Files an uncontended commit opens under `_versions`: the current
+    * version's manifest metadata. A won publish reads nothing back. */
+  private val WonPathOpens = 3
+
   private def batch(lo: Int, hi: Int): DataFrame =
     CdcSynth.envelope((lo until hi).map { i =>
       (i.toLong, (i % 37).toLong, s"t${i % 3}", i / 4.0,
@@ -114,6 +118,23 @@ class CommitPathSpec extends SparkSpec {
     val (none, jobs) = jobsOf(MorTableImpl.compactMor(spark, mor, 100, NB))
     assert(none.isEmpty, "nothing is over the threshold")
     assert(jobs == 0, s"a no-op MOR compaction check ran $jobs Spark jobs")
+  }
+
+  test("an uncontended commitMerge opens a pinned number of files under _versions: no read-back on the won path") {
+    spark.sparkContext.hadoopConfiguration.set("fs.hookfs.impl",
+      classOf[graft.fs.HookFileSystem].getName)
+    val root = s"hookfs://${Files.createTempDirectory("graft_won_opens")}"
+    VersionedTableImpl.commitMerge(spark, root, batch(0, 200), NB)
+    VersionedTableImpl.commitMerge(spark, root, batch(200, 400), NB)
+    val opens = new java.util.concurrent.atomic.AtomicInteger(0)
+    graft.fs.HookFileSystem.onOpen = p =>
+      if (p.toString.contains("/_versions/")) opens.incrementAndGet()
+    try VersionedTableImpl.commitMerge(spark, root, batch(400, 600), NB)
+    finally graft.fs.HookFileSystem.onOpen = _ => ()
+    assert(VersionedTableImpl.currentVersion(spark, root) == 3)
+    info(s"won-path commit: ${opens.get} opens under _versions")
+    assert(opens.get == WonPathOpens,
+      s"an uncontended commit opened ${opens.get} files under _versions")
   }
 
   test("a rebucket that wins the sink's first-targeted version: _feed/v{N} equals changeFeed(N-1, N)") {

@@ -214,7 +214,7 @@ class LatencyFaultSoakSpec extends SparkSpec {
     val tmpA = new Path(root, "_versions/.tmp-slowwriter.parquet")
     VersionedTableImpl.descriptorDf(spark, root, 1)
       .coalesce(1).write.mode("overwrite").parquet(tmpA.toString)
-    val cidA = VersionedTableImpl.claimVersionId(spark, root, 2,
+    val cidA = CommitProtocol.claimVersionId(spark, root, 2,
       staleClaimMs = 300L)
     assert(cidA.isDefined, "A must win the fresh claim")
     Thread.sleep(800L)
@@ -228,7 +228,7 @@ class LatencyFaultSoakSpec extends SparkSpec {
     // A wakes and tries to finish its publish of v2: LOUD abort — the
     // fail-closed check, not a silent clobber of B's committed manifest
     val e = intercept[IllegalStateException] {
-      VersionedTableImpl.publish(fs, tmpA,
+      CommitProtocol.publish(fs, tmpA,
         VersionedTableImpl.visiblePath(root, 2), "slow writer A")
     }
     assert(e.getMessage.contains("already exists"),
@@ -238,14 +238,14 @@ class LatencyFaultSoakSpec extends SparkSpec {
 
     // ---- the merely-slow half: C claims v3 with the default-scale
     // window; 1 s of slowness must NOT make it takeover-eligible
-    val cidC = VersionedTableImpl.claimVersionId(spark, root, 3,
+    val cidC = CommitProtocol.claimVersionId(spark, root, 3,
       staleClaimMs = 60000L)
     assert(cidC.isDefined)
     Thread.sleep(1000L)
-    val thief = VersionedTableImpl.claimVersionId(spark, root, 3,
+    val thief = CommitProtocol.claimVersionId(spark, root, 3,
       staleClaimMs = 60000L)
     assert(thief.isEmpty, "a slow-but-in-window writer must not be " +
       "taken over — staleness is the only takeover license")
-    VersionedTableImpl.releaseClaim(spark, root, 3, cidC.get, 60000L)
+    CommitProtocol.releaseClaim(spark, root, 3, cidC.get, 60000L)
   }
 }

@@ -121,59 +121,121 @@ class ReadSafetySpec extends SparkSpec {
   // ------------- round-15 "Next round" #1/#2: the response-lost pointer
   // PUT with a degraded read path, pinned as a deterministic schedule
 
-  test("pointer PUT response lost + failing read-backs: the staged data dir survives and the version is readable") {
-    graft.fs.ScriptedFaultFileSystem.reset()
-    val local = java.nio.file.Files.createTempDirectory("ptr_unknown").toString
-    val root = s"scripted:$local"
-    try {
-      VersionedTableImpl.setConditionalCommit(spark, root)
-      VersionedTableImpl.commitMerge(spark, root,
-        env((1L to 6L).map(i => (8L * i, i))), NB)
-      assert(VersionedTableImpl.readVersion(spark, root, 1).count() == 6L)
+  /** One commit-protocol caller under the response-lost schedule: `setup`
+    * commits v1 (and whatever else the caller needs), `run` makes the
+    * caller target v2 and returns the version it names (-1 for a loss),
+    * and v2 must then hold `users`. */
+  private case class ResponseLost(caller: String, mor: Boolean,
+      setup: String => Unit, run: String => Int, users: Set[Long])
 
-      // THE schedule: the v2 pointer PUT lands but its response is lost,
-      // and all 4 of the publisher's read-backs fail (a degraded read
-      // path, NOT a positive absence). The publish aborts UNKNOWN and
-      // STRANDS the data dir; the commit loop then sees the committed
-      // pointer (exists() is not a read), checks the committed
-      // descriptor's CONTENT, recognizes its own staged segment — the
-      // "racer" was us, response-lost — and returns v2 as WON. The OLD
-      // behavior deleted the v2 data dir at the abort and the staged
-      // segment at the "beaten" cleanup, gutting the committed version.
-      graft.fs.ScriptedFaultFileSystem.script(
-        graft.fs.ScriptedFaultFileSystem.loseCreateResponses,
-        "_versions/v2.parquet.ptr", 1)
-      graft.fs.ScriptedFaultFileSystem.script(
-        graft.fs.ScriptedFaultFileSystem.failOpens,
-        "_versions/v2.parquet.ptr", 4)
+  private val base = (1L to 6L).map(i => (8L * i, i))
+  private val extra = Seq((8L * 100, 50L))
+  private val baseUsers = (1L to 6L).toSet
 
-      val v = VersionedTableImpl.commitMerge(spark, root,
-        env(Seq((8L * 100, 50L))), NB)
-      assert(v == 2, s"the doubted-then-confirmed commit IS version 2: $v")
+  private val responseLostRows = Seq(
+    ResponseLost("commitMerge", mor = false,
+      root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
+      root => VersionedTableImpl.commitMerge(spark, root, env(extra), NB),
+      baseUsers + 50L),
+    ResponseLost("restore", mor = false,
+      root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
+      root => VersionedTableImpl.restore(spark, root, 1),
+      baseUsers),
+    ResponseLost("fastForward", mor = false,
+      root => {
+        VersionedTableImpl.commitMerge(spark, root, env(base), NB)
+        VersionedTableImpl.createBranch(spark, root, "audit")
+        VersionedTableImpl.commitMergeToBranch(spark, root, "audit", env(extra), NB)
+      },
+      root => VersionedTableImpl.fastForward(spark, root, "audit").fold(_ => -1, identity),
+      baseUsers + 50L),
+    ResponseLost("compactVersion", mor = false,
+      root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
+      root => VersionedTableImpl.compactVersion(spark, root, 0, NB).getOrElse(-1),
+      baseUsers),
+    ResponseLost("rebucket", mor = false,
+      root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
+      root => VersionedTableImpl.rebucket(spark, root, 2 * NB).getOrElse(-1),
+      baseUsers),
+    ResponseLost("commitMergeAudited", mor = false,
+      root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
+      root => VersionedTableImpl.commitMergeAudited(spark, root, env(extra), NB)(
+        _ => None).fold(_ => -1, identity),
+      baseUsers + 50L),
+    ResponseLost("MOR commitAppend", mor = true,
+      root => MorTableImpl.commitAppend(spark, root, env(base), NB),
+      root => MorTableImpl.commitAppend(spark, root, env(extra), NB),
+      baseUsers + 50L),
+    ResponseLost("MOR fold", mor = true,
+      root => MorTableImpl.commitAppend(spark, root, env(base), NB),
+      root => MorTableImpl.compactMor(spark, root, 0, NB).getOrElse(-1),
+      baseUsers))
 
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dataDirs = fs.listStatus(new Path(root, "_versions"))
-        .map(_.getPath.getName).filter(_.startsWith(".data-v2.parquet-"))
-      assert(dataDirs.length == 1,
-        s"the staged data dir must survive an UNKNOWN pointer state: ${dataDirs.toSeq}")
-      assert(fs.exists(new Path(root, "_versions/v2.parquet.ptr")),
-        "the response-lost PUT did land")
-      assert(graft.fs.ScriptedFaultFileSystem.fired.get() >= 5,
-        "the schedule must actually have fired")
+  private val responseLostTitle = "pointer PUT response lost + failing " +
+    "read-backs: the staged data dir survives and the version is readable"
 
-      assert(VersionedTableImpl.currentVersion(spark, root) == 2)
-      val users = VersionedTableImpl.readVersion(spark, root, 2)
-        .select(col("user_id")).as[Long].collect().toSet
-      assert(users == (1L to 6L).toSet + 50L,
-        s"no rows may be lost through the doubted commit: $users")
+  responseLostRows.foreach { row =>
+    test(if (row.caller == "commitMerge") responseLostTitle
+         else s"$responseLostTitle — ${row.caller}") {
+      graft.fs.ScriptedFaultFileSystem.reset()
+      val local = java.nio.file.Files.createTempDirectory("ptr_unknown").toString
+      val root = s"scripted:$local"
+      def users(v: Int): Set[Long] =
+        (if (row.mor) MorTableImpl.readMor(spark, root, v)
+         else VersionedTableImpl.readVersion(spark, root, v))
+          .select(col("user_id")).as[Long].collect().toSet
+      try {
+        VersionedTableImpl.setConditionalCommit(spark, root)
+        row.setup(root)
+        assert(VersionedTableImpl.currentVersion(spark, root) == 1)
 
-      // and sweepStranded must NOT touch the dir the live pointer names,
-      // even at age 0
-      val swept = VersionedTableImpl.sweepStranded(spark, root, olderThanMs = 0L)
-      assert(swept.forall(!_.contains(".data-v2.parquet-")),
-        s"sweep must never reclaim a pointer-named data dir: $swept")
-      assert(VersionedTableImpl.readVersion(spark, root, 2).count() == 7L)
-    } finally graft.fs.ScriptedFaultFileSystem.reset()
+        // THE schedule: the v2 pointer PUT lands but its response is lost,
+        // and all 4 of the publisher's read-backs fail (a degraded read
+        // path, NOT a positive absence). The publish aborts UNKNOWN and
+        // STRANDS the data dir; the protocol sees the committed pointer
+        // (exists() is not a read), reads it once more, finds it names its
+        // own publisher-unique data dir — the "racer" was us,
+        // response-lost — and reports v2 as WON. Deleting the data dir or
+        // the staged segments here would gut the committed version;
+        // retrying would commit the batch a second time.
+        graft.fs.ScriptedFaultFileSystem.script(
+          graft.fs.ScriptedFaultFileSystem.loseCreateResponses,
+          "_versions/v2.parquet.ptr", 1)
+        graft.fs.ScriptedFaultFileSystem.script(
+          graft.fs.ScriptedFaultFileSystem.failOpens,
+          "_versions/v2.parquet.ptr", 4)
+
+        val v = row.run(root)
+        assert(v == 2, s"${row.caller}: the doubted-then-confirmed commit IS version 2: $v")
+        assert(graft.fs.ScriptedFaultFileSystem.fired.get() >= 5,
+          "the schedule must actually have fired")
+        assert(VersionedTableImpl.currentVersion(spark, root) == 2,
+          s"${row.caller}: exactly one version is added")
+
+        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // (a WAP promote's data dir is its pending's: `.data-.pending-v2…`)
+        val dataDirs = fs.listStatus(new Path(root, "_versions"))
+          .map(_.getPath.getName)
+          .filter(n => n.startsWith(".data-") && n.contains("v2.parquet-"))
+        assert(dataDirs.length == 1,
+          s"the staged data dir must survive an UNKNOWN pointer state: ${dataDirs.toSeq}")
+        val ptr = new Path(root, "_versions/v2.parquet.ptr")
+        assert(fs.exists(ptr), "the response-lost PUT did land")
+        val in = fs.open(ptr)
+        try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim ==
+          dataDirs.head, "the committed pointer names the surviving data dir")
+        finally in.close()
+        assert(users(2) == row.users,
+          s"no rows may be lost through the doubted commit: ${users(2)}")
+
+        // and sweepStranded must NOT touch the dir the live pointer names,
+        // even at age 0
+        val swept = VersionedTableImpl.sweepStranded(spark, root, olderThanMs = 0L)
+        assert(swept.forall(!_.contains(dataDirs.head)),
+          s"sweep must never reclaim a pointer-named data dir: $swept")
+        assert(users(2) == row.users)
+      } finally graft.fs.ScriptedFaultFileSystem.reset()
+    }
   }
 
   test("vacuum fails loudly on an unreadable branch manifest instead of sweeping the branch") {
