@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 import VersionedTableImpl.{Absent, Got, Lineage, Main, Unknown, conditionalCommit,
   conditionalCommitFor, deleteSegment, fsOf, manifestCommitted,
-  manifestDataPath, pendingPath, ptrOf, readBack, visiblePath}
+  manifestDataPath, ptrOf, readBack}
 
 /** THE COMMIT PROTOCOL of the versioned lake — the one place a version
   * is claimed, published and decided, for every COW and MOR write path
@@ -36,10 +36,9 @@ import VersionedTableImpl.{Absent, Got, Lineage, Main, Unknown, conditionalCommi
   * current — a racer's publish leaves its claim file behind), publishes,
   * and returns a sealed [[Outcome]]:
   *
-  *  - [[Won]]: the publish reported success;
-  *  - [[WonResponseLost]]: the pointer PUT landed with its response lost
-  *    and every read-back failed; the pointer, read once more, names this
-  *    attempt's publisher-unique `.data-` dir, so the commit stands;
+  *  - [[Won]]: the publish committed — including a pointer PUT whose
+  *    response was lost, which [[publish]]'s read-back recognizes by the
+  *    publisher-unique `.data-` dir the pointer names;
   *  - [[Beaten]]: the claim's exclusivity was beaten through the takeover
   *    edge — a racer's manifest holds the version, intact, and ours
   *    re-merges like any lost race instead of dying loudly;
@@ -48,26 +47,31 @@ import VersionedTableImpl.{Absent, Got, Lineage, Main, Unknown, conditionalCommi
   * On Beaten and Lost the attempt deletes what it staged: the tmp
   * descriptor and the caller's `own` segments. A publish that fails
   * without committing releases the claim and rethrows. A publish whose
-  * pointer state stays UNKNOWN rethrows with everything stranded: the
+  * pointer state stays UNKNOWN ([[PointerUnknown]]) at a committed
+  * destination rethrows with everything stranded and the claim held: the
   * staged artifacts may be a committed version's, so nothing is deleted
   * and nothing is guessed. The won path does no I/O beyond the publish.
   * [[retry]] drives the loops; callers that yield after one attempt
   * (compaction, rebucket, fast-forward, the MOR fold) map a loss to None
-  * or Left.
+  * or Left. Writers that hold their destination by other means publish
+  * with no claim step: a pending manifest through [[promote]], a branch
+  * fork through [[publishUnclaimed]].
   */
 private[ops] object CommitProtocol {
 
   sealed trait Outcome { def won: Boolean }
   case object Won extends Outcome { val won = true }
-  case object WonResponseLost extends Outcome { val won = true }
   case object Beaten extends Outcome { val won = false }
   case object Lost extends Outcome { val won = false }
 
-  /** [[publish]]'s "pointer state UNKNOWN" abort, carrying the data dir
-    * the PUT named — the identity [[attempt]] checks the pointer against. */
-  private[ops] final class PointerUnknown(msg: String, val data: Path,
-      val promoting: Boolean, cause: Throwable)
+  /** [[publish]]'s "pointer state UNKNOWN" abort: the pointer PUT may
+    * have landed, so it is never read as a loss. */
+  private[ops] final class PointerUnknown(msg: String, cause: Throwable)
     extends IllegalStateException(msg, cause)
+
+  /** A fresh protocol-named staging path for a descriptor. */
+  private def stagedTmp(root: String): Path = new Path(root,
+    s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
 
   /** One optimistic attempt at version `v` of lineage `lin`: `stage`
     * writes the descriptor at the tmp path it is given; the attempt then
@@ -78,14 +82,18 @@ private[ops] object CommitProtocol {
       lin: Lineage = Main, pending: Boolean = false, own: Seq[String] = Nil,
       staleClaimMs: Long = 60000L)(stage: Path => Unit): Outcome = {
     val fs = fsOf(s, root)
-    val tmp = new Path(root,
-      s"_versions/.tmp-${java.util.UUID.randomUUID().toString.replace("-", "")}.parquet")
+    val tmp = stagedTmp(root)
     stage(tmp)
     val dest = if (pending) lin.pending(root, v) else lin.visible(root, v)
     val outcome = claimVersionId(s, root, v, staleClaimMs, lin) match {
       case None => Lost
       case Some(cid) =>
-        decide(fs, tmp, dest, what)(releaseClaim(s, root, v, cid, staleClaimMs, lin))
+        try { publish(fs, tmp, dest, what); Won }
+        catch {
+          case u: PointerUnknown if manifestCommitted(fs, dest) => throw u
+          case _: IllegalStateException if manifestCommitted(fs, dest) => Beaten
+          case e: Throwable => releaseClaim(s, root, v, cid, staleClaimMs, lin); throw e
+        }
     }
     if (!outcome.won) {
       fs.delete(tmp, true)
@@ -94,37 +102,29 @@ private[ops] object CommitProtocol {
     outcome
   }
 
-  /** Promote main's committed PENDING manifest of `v` to visible — the
-    * WAP and txn publish. The pending reserves `v` (its claim is held),
-    * so there is no claim step; a pending pointer a response-lost promote
-    * consumed is dropped here. */
-  def promote(s: SparkSession, root: String, v: Int, what: String): Outcome = {
-    val fs = fsOf(s, root)
-    val pending = pendingPath(root, v)
-    val outcome = decide(fs, pending, visiblePath(root, v), what)(())
-    if (outcome == WonResponseLost) fs.delete(ptrOf(pending), false)
-    outcome
-  }
-
-  /** Publish and decide. A publish that throws at a committed `dest` was
-    * beaten — unless it is the UNKNOWN abort and the pointer, read once
-    * more, names this publish's own data dir. Any other failure committed
-    * nothing: `release` runs and the failure propagates. */
-  private def decide(fs: org.apache.hadoop.fs.FileSystem, src: Path,
-      dest: Path, what: String)(release: => Unit): Outcome =
-    try { publish(fs, src, dest, what); Won }
-    catch {
-      case u: PointerUnknown if manifestCommitted(fs, dest) =>
-        readBack(fs, ptrOf(dest)) match {
-          case Got(n) if n == u.data.getName => WonResponseLost
-          case Got(_) =>
-            if (!u.promoting) fs.delete(u.data, true) // positively disowned
-            Beaten
-          case _ => throw u
-        }
-      case _: IllegalStateException if manifestCommitted(fs, dest) => Beaten
-      case e: Throwable => release; throw e
+  /** Promote a committed PENDING manifest to its `visible` path — the
+    * WAP and txn publish, with no claim step: the pending holds v's claim,
+    * so only this promote, or another recoverer's of the same txn record,
+    * can commit `visible`. A failed promote that leaves `visible`
+    * committed is therefore that same promote, landed: it stands, and the
+    * pending pointer it left unconsumed is dropped. */
+  def promote(fs: org.apache.hadoop.fs.FileSystem, pending: Path,
+      visible: Path, what: String): Unit =
+    try publish(fs, pending, visible, what)
+    catch { case _: IllegalStateException if manifestCommitted(fs, visible) =>
+      fs.delete(ptrOf(pending), false)
     }
+
+  /** Stage a descriptor and publish it at `dest` with no claim step, for
+    * a writer that holds `dest` by other means (a branch fork, after its
+    * exclusive ref create). Any failure propagates: a `dest` already
+    * committed may be a crashed earlier writer's. */
+  def publishUnclaimed(s: SparkSession, root: String, dest: Path,
+      what: String)(stage: Path => Unit): Unit = {
+    val tmp = stagedTmp(root)
+    stage(tmp)
+    publish(fsOf(s, root), tmp, dest, what)
+  }
 
   /** Drive `attempt` until it commits: Right ends the loop, Left(v) is a
     * loss at version v — wait for that version's outcome, then try again,
@@ -429,7 +429,7 @@ private[ops] object CommitProtocol {
           readBack(fs, destPtr) match {
             case Got(n) if n == data.getName => won = true // response lost
             case Got(_) => beaten = true // a racer's pointer stands
-            case _ if attempt < 4 => Thread.sleep(50L * attempt)
+            case _ if attempt < 5 => Thread.sleep(50L * attempt)
             case Absent =>
               // POSITIVELY absent (the store answered "no such object"):
               // the PUT genuinely never landed — the staged copy is
@@ -446,14 +446,13 @@ private[ops] object CommitProtocol {
               // pointer stands, the dir IS the version's data; if it turns
               // out absent, the age-gated [[VersionedTableImpl.sweepStranded]] reclaims it
               // (it positively re-checks the pointer before touching a
-              // `.data-` dir). [[attempt]] reads the pointer once more
-              // to tell a response-lost win from a loss.
+              // `.data-` dir).
               throw new PointerUnknown(
                 s"$what: pointer PUT to $destPtr failed and the read-back " +
                   s"also fails after $attempt attempts — pointer state " +
                   s"UNKNOWN; leaving staged data dir $data for " +
                   "sweepStranded (deleting it could destroy a committed " +
-                  "version if the PUT landed response-lost)", data, promoting, e)
+                  "version if the PUT landed response-lost)", e)
           }
         }
       }

@@ -1034,10 +1034,7 @@ object VersionedTableImpl {
       .filter(!col("last_op").isin(LakehouseOpsImpl.DeleteOps: _*)) // live state
     audit(staged) match {
       case None =>
-        val outcome = CommitProtocol.promote(s, root, newV, "WAP publish")
-        if (!outcome.won)
-          throw new IllegalStateException(s"WAP publish held the claim but " +
-            s"v$newV was $outcome at $root — claim invariant violated")
+        CommitProtocol.promote(fs, pending, visiblePath(root, newV), "WAP publish")
         Right(newV)
       case Some(reason) =>
         abortPending(s, root, newV) // release N for the next commit
@@ -1967,11 +1964,8 @@ object VersionedTableImpl {
     // branch v0 = the fork DESCRIPTOR, copied metadata->metadata (the
     // fork's segments are shared, not copied — a fork is O(segments)).
     // The exclusive ref create above makes this the branch's only writer.
-    val outcome = CommitProtocol.attempt(s, root, 0, s"branch '$name' fork",
-      lin)(copyDescriptorTo(s, root, fork, _))
-    if (!outcome.won)
-      throw new IllegalStateException(s"branch '$name' fork lost its v0 " +
-        s"($outcome) at $root — claim invariant violated")
+    CommitProtocol.publishUnclaimed(s, root, lin.visible(root, 0),
+      s"branch '$name' fork")(copyDescriptorTo(s, root, fork, _))
     fork
   }
 
@@ -2164,9 +2158,7 @@ object VersionedTableImpl {
       val v = vs.trim.toInt
       val (pending, visible) = (pendingPath(root, v), visiblePath(root, v))
       if (!manifestCommitted(fs, visible) && manifestCommitted(fs, pending))
-        // two recoverers racing the same record: the loser's Beaten is a
-        // benign already-done, not a protocol violation
-        CommitProtocol.promote(s, root, v, "txn publish")
+        CommitProtocol.promote(fs, pending, visible, "txn publish")
       // a promote that crashed between the visible-pointer PUT and the
       // pending-pointer delete leaves a CONSUMED pending pointer naming
       // the visible version's own data dir — drop it here (idempotent),

@@ -124,9 +124,11 @@ class ReadSafetySpec extends SparkSpec {
   /** One commit-protocol caller under the response-lost schedule: `setup`
     * commits v1 (and whatever else the caller needs), `run` makes the
     * caller target v2 and returns the version it names (-1 for a loss),
-    * and v2 must then hold `users`. */
+    * and v2 must then hold `users`. `promotes`: the caller publishes v2
+    * with no claim step (the WAP promote), so a committed v2 is its own. */
   private case class ResponseLost(caller: String, mor: Boolean,
-      setup: String => Unit, run: String => Int, users: Set[Long])
+      setup: String => Unit, run: String => Int, users: Set[Long],
+      promotes: Boolean = false)
 
   private val base = (1L to 6L).map(i => (8L * i, i))
   private val extra = Seq((8L * 100, 50L))
@@ -161,7 +163,7 @@ class ReadSafetySpec extends SparkSpec {
       root => VersionedTableImpl.commitMerge(spark, root, env(base), NB),
       root => VersionedTableImpl.commitMergeAudited(spark, root, env(extra), NB)(
         _ => None).fold(_ => -1, identity),
-      baseUsers + 50L),
+      baseUsers + 50L, promotes = true),
     ResponseLost("MOR commitAppend", mor = true,
       root => MorTableImpl.commitAppend(spark, root, env(base), NB),
       root => MorTableImpl.commitAppend(spark, root, env(extra), NB),
@@ -171,70 +173,101 @@ class ReadSafetySpec extends SparkSpec {
       root => MorTableImpl.compactMor(spark, root, 0, NB).getOrElse(-1),
       baseUsers))
 
+  /** Runs `row` against a fresh conditional-commit table with the v2
+    * pointer PUT landing response-lost and the first `failedReads`
+    * pointer read-backs failing; `check` gets the caller's result (its
+    * version, or the abort it threw). Then, whatever the caller answered,
+    * v2 must be committed exactly once with `row.users`, its one `.data-`
+    * dir named by the pointer and kept by a grace-0 sweep. */
+  private def underResponseLost(row: ResponseLost, failedReads: Int)(
+      check: Either[Throwable, Int] => Unit): Unit = {
+    graft.fs.ScriptedFaultFileSystem.reset()
+    val local = java.nio.file.Files.createTempDirectory("ptr_unknown").toString
+    val root = s"scripted:$local"
+    def rows(v: Int): DataFrame =
+      if (row.mor) MorTableImpl.readMor(spark, root, v)
+      else VersionedTableImpl.readVersion(spark, root, v)
+    def users(v: Int): Set[Long] =
+      rows(v).select(col("user_id")).as[Long].collect().toSet
+    try {
+      VersionedTableImpl.setConditionalCommit(spark, root)
+      row.setup(root)
+      assert(VersionedTableImpl.currentVersion(spark, root) == 1)
+      assert(rows(1).count() == baseUsers.size.toLong)
+
+      graft.fs.ScriptedFaultFileSystem.script(
+        graft.fs.ScriptedFaultFileSystem.loseCreateResponses,
+        "_versions/v2.parquet.ptr", 1)
+      graft.fs.ScriptedFaultFileSystem.script(
+        graft.fs.ScriptedFaultFileSystem.failOpens,
+        "_versions/v2.parquet.ptr", failedReads)
+
+      check(try Right(row.run(root)) catch { case t: Throwable => Left(t) })
+      assert(graft.fs.ScriptedFaultFileSystem.fired.get() >= 5,
+        "the schedule must actually have fired")
+      graft.fs.ScriptedFaultFileSystem.reset()
+      assert(VersionedTableImpl.currentVersion(spark, root) == 2,
+        s"${row.caller}: exactly one version is added")
+
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // (a WAP promote's data dir is its pending's: `.data-.pending-v2…`)
+      val dataDirs = fs.listStatus(new Path(root, "_versions"))
+        .map(_.getPath.getName)
+        .filter(n => n.startsWith(".data-") && n.contains("v2.parquet-"))
+      assert(dataDirs.length == 1,
+        s"the staged data dir must survive a doubted pointer PUT: ${dataDirs.toSeq}")
+      val ptr = new Path(root, "_versions/v2.parquet.ptr")
+      assert(fs.exists(ptr), "the response-lost PUT did land")
+      val in = fs.open(ptr)
+      try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim ==
+        dataDirs.head, "the committed pointer names the surviving data dir")
+      finally in.close()
+      assert(users(2) == row.users && rows(2).count() == row.users.size.toLong,
+        s"no rows may be lost or duplicated through the doubted commit: ${users(2)}")
+
+      // and sweepStranded must NOT touch the dir the live pointer names,
+      // even at age 0
+      val swept = VersionedTableImpl.sweepStranded(spark, root, olderThanMs = 0L)
+      assert(swept.forall(!_.contains(dataDirs.head)),
+        s"sweep must never reclaim a pointer-named data dir: $swept")
+      assert(users(2) == row.users && rows(2).count() == row.users.size.toLong)
+    } finally graft.fs.ScriptedFaultFileSystem.reset()
+  }
+
   private val responseLostTitle = "pointer PUT response lost + failing " +
     "read-backs: the staged data dir survives and the version is readable"
 
+  // THE schedule: the v2 pointer PUT lands but its response is lost, and
+  // 4 read-backs fail (a degraded read path, NOT a positive absence). The
+  // publisher's fifth read-back finds the pointer naming its own
+  // publisher-unique data dir — the "racer" was us, response-lost — and
+  // every caller reports v2 as WON. Deleting the data dir or the staged
+  // segments here would gut the committed version; retrying would commit
+  // the batch a second time.
   responseLostRows.foreach { row =>
     test(if (row.caller == "commitMerge") responseLostTitle
          else s"$responseLostTitle — ${row.caller}") {
-      graft.fs.ScriptedFaultFileSystem.reset()
-      val local = java.nio.file.Files.createTempDirectory("ptr_unknown").toString
-      val root = s"scripted:$local"
-      def users(v: Int): Set[Long] =
-        (if (row.mor) MorTableImpl.readMor(spark, root, v)
-         else VersionedTableImpl.readVersion(spark, root, v))
-          .select(col("user_id")).as[Long].collect().toSet
-      try {
-        VersionedTableImpl.setConditionalCommit(spark, root)
-        row.setup(root)
-        assert(VersionedTableImpl.currentVersion(spark, root) == 1)
+      underResponseLost(row, failedReads = 4) { r =>
+        assert(r == Right(2),
+          s"${row.caller}: the doubted-then-confirmed commit IS version 2: $r")
+      }
+    }
+  }
 
-        // THE schedule: the v2 pointer PUT lands but its response is lost,
-        // and all 4 of the publisher's read-backs fail (a degraded read
-        // path, NOT a positive absence). The publish aborts UNKNOWN and
-        // STRANDS the data dir; the protocol sees the committed pointer
-        // (exists() is not a read), reads it once more, finds it names its
-        // own publisher-unique data dir — the "racer" was us,
-        // response-lost — and reports v2 as WON. Deleting the data dir or
-        // the staged segments here would gut the committed version;
-        // retrying would commit the batch a second time.
-        graft.fs.ScriptedFaultFileSystem.script(
-          graft.fs.ScriptedFaultFileSystem.loseCreateResponses,
-          "_versions/v2.parquet.ptr", 1)
-        graft.fs.ScriptedFaultFileSystem.script(
-          graft.fs.ScriptedFaultFileSystem.failOpens,
-          "_versions/v2.parquet.ptr", 4)
-
-        val v = row.run(root)
-        assert(v == 2, s"${row.caller}: the doubted-then-confirmed commit IS version 2: $v")
-        assert(graft.fs.ScriptedFaultFileSystem.fired.get() >= 5,
-          "the schedule must actually have fired")
-        assert(VersionedTableImpl.currentVersion(spark, root) == 2,
-          s"${row.caller}: exactly one version is added")
-
-        val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // (a WAP promote's data dir is its pending's: `.data-.pending-v2…`)
-        val dataDirs = fs.listStatus(new Path(root, "_versions"))
-          .map(_.getPath.getName)
-          .filter(n => n.startsWith(".data-") && n.contains("v2.parquet-"))
-        assert(dataDirs.length == 1,
-          s"the staged data dir must survive an UNKNOWN pointer state: ${dataDirs.toSeq}")
-        val ptr = new Path(root, "_versions/v2.parquet.ptr")
-        assert(fs.exists(ptr), "the response-lost PUT did land")
-        val in = fs.open(ptr)
-        try assert(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim ==
-          dataDirs.head, "the committed pointer names the surviving data dir")
-        finally in.close()
-        assert(users(2) == row.users,
-          s"no rows may be lost through the doubted commit: ${users(2)}")
-
-        // and sweepStranded must NOT touch the dir the live pointer names,
-        // even at age 0
-        val swept = VersionedTableImpl.sweepStranded(spark, root, olderThanMs = 0L)
-        assert(swept.forall(!_.contains(dataDirs.head)),
-          s"sweep must never reclaim a pointer-named data dir: $swept")
-        assert(users(2) == row.users)
-      } finally graft.fs.ScriptedFaultFileSystem.reset()
+  // The read path stays down: the pointer state is UNKNOWN. A claimed
+  // publish must fail loudly and strand everything — never guess "won",
+  // never read the committed pointer as a racer's (that would delete the
+  // segments v2 references, or retry into a second version). A claimless
+  // publish (the WAP promote) holds v2 exclusively, so its landed pointer
+  // is its own commit.
+  responseLostRows.foreach { row =>
+    test(s"pointer state UNKNOWN after every read-back: fails loudly, strands the commit — ${row.caller}") {
+      underResponseLost(row, failedReads = 100) { r =>
+        if (row.promotes) assert(r == Right(2), s"${row.caller}: $r")
+        else assert(r.fold(t => String.valueOf(t.getMessage)
+            .contains("pointer state UNKNOWN"), _ => false),
+          s"${row.caller}: an UNKNOWN pointer state must abort loudly: $r")
+      }
     }
   }
 
